@@ -52,6 +52,15 @@ updated snapshots are written to ``out_dir`` (the old state is never
 mutated — snapshot-in/snapshot-out, the Iceberg model), which is itself a
 valid state for the next delta.
 
+Shared with the batch (``pipeline.py``): the snapshot schema and its
+stale-state check (``STAGE_COLUMNS``, ``read_snapshot``), the s1 builder
+(``build_docs``), the s3 verify and ``s3_buckets`` fold, the s5 member
+build + vote (``vote_clusters``), and ``DedupPipeline._stage``, which
+writes, reads back and counts all five snapshots.  So the merge writes
+the batch's ``REPORT.json`` schema, plus
+``s5_canonical.n_affected_clusters``.  Only merge logic lives here; it
+rebuilds ``out_dir`` on every call (no resume).
+
 I/O cost note: each updated table is expressed as ``old ∪ delta``.  Under
 an Iceberg catalog that union is an O(delta) metadata append — the new
 snapshot shares the old data files (``writeTo(...).append()`` on a
@@ -65,36 +74,21 @@ is O(delta + touched), which is the point.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .config import DEFAULT_CONFIG, DedupConfig
 from .operators.components import connected_components
-from .operators.consensus import consensus_vote
-from .operators.exact import (
-    distinct_text_reps,
-    route,
-    with_doc_ids,
-    with_signatures,
-    with_text_hash,
-)
+from .operators.exact import distinct_text_reps, with_signatures
 from .operators.lsh import band_explode, bucketed_pairs
-from .operators.metrics import RunReport
-from .operators.verify import rep_containment, verify_pairs
-from .pipeline import DOC_COLUMNS, _ensure_text
+from .operators.verify import rep_containment
+from .pipeline import (
+    STAGE_COLUMNS,
+    DedupPipeline,
+    build_docs,
+    read_snapshot,
+    vote_clusters,
+)
 from .sources import TableIO
-
-STAGES = ["s1_docs", "s2_reps", "s3_edges", "s4_cc", "s5_canonical"]
-
-
-def _delta_docs(new_pages: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Same routing as the batch pipeline's s1 (one code path would be
-    ideal; the build is three lines and pinned by the equality test)."""
-    main, bypass = route(with_doc_ids(_ensure_text(new_pages)), cfg)
-    main = with_text_hash(main).withColumn("bypass", F.lit(False))
-    bypass = with_text_hash(bypass).withColumn("bypass", F.lit(True))
-    return main.unionByName(bypass).select(*DOC_COLUMNS)
 
 
 def dedup_pages_incremental(
@@ -109,34 +103,28 @@ def dedup_pages_incremental(
     table.  See the module docstring for semantics and cost model.
     """
     old = TableIO(spark, state_dir)
-    missing = [s for s in STAGES if not old.exists(s)]
+    missing = [s for s in STAGE_COLUMNS if not old.exists(s)]
     if missing:
         raise ValueError(
             f"state_dir {state_dir} is not a complete dedup state: "
             f"missing snapshots {missing} (run dedup_pages with "
             f"checkpoint='stages' first)"
         )
-    out = TableIO(spark, out_dir)
-    report = RunReport()
-
-    old_docs = old.read("s1_docs")
-    old_reps = old.read("s2_reps")
-    old_edges = old.read("s3_edges")
-    old_cc = old.read("s4_cc")
-    old_canon = old.read("s5_canonical")
+    old_docs, old_reps, old_edges, old_cc, old_canon = (
+        read_snapshot(old, s) for s in STAGE_COLUMNS
+    )
+    pipe = DedupPipeline(spark, out_dir, cfg)
 
     # ---- s1: append the delta -------------------------------------------
     # re-delivered fetches (same url+warc_ts → same doc_id) are dropped
     # BEFORE the write: without this anti-join a re-delivery would append
     # duplicate rows to s1_docs, and the NEXT delta touching those clusters
     # would double-count them in the vote (fr/n_variants inflation)
-    delta = _delta_docs(new_pages, cfg).join(
+    new_docs = build_docs(new_pages, cfg).join(
         old_docs.select("doc_id"), "doc_id", "left_anti"
     )
-    out.write(old_docs.unionByName(delta), "s1_docs")
-    docs = out.read("s1_docs")
+    docs = pipe._stage("s1_docs", lambda: old_docs.unionByName(new_docs), force=True)
     delta = docs.join(old_docs.select("doc_id"), "doc_id", "left_anti")
-    report.stage("s1_docs", rows=docs.count())
 
     # ---- s2: sign only never-seen texts ---------------------------------
     delta_main = delta.filter(~F.col("bypass")).select(
@@ -151,10 +139,7 @@ def dedup_pages_incremental(
         ["text_hash", "text_hash2"],
         "left_anti",
     )
-    fresh_signed = with_signatures(fresh, cfg).select(
-        "text_hash", "text_hash2", "rep_id", "n_members",
-        "norm_text", "minhash", "simhash",
-    )
+    fresh_signed = with_signatures(fresh, cfg).select(*STAGE_COLUMNS["s2_reps"])
     refreshed_old = (
         old_reps.join(delta_counts, ["text_hash", "text_hash2"], "left")
         .withColumn(
@@ -163,15 +148,15 @@ def dedup_pages_incremental(
         .drop("d_members")
         .select(*old_reps.columns)
     )
-    out.write(refreshed_old.unionByName(fresh_signed), "s2_reps")
-    reps = out.read("s2_reps")
-    report.stage("s2_reps", rows=reps.count())
+    reps = pipe._stage(
+        "s2_reps", lambda: refreshed_old.unionByName(fresh_signed), force=True
+    )
 
     # ---- s3: candidates only where a fresh rep can matter ----------------
     # bands of ALL reps are a narrow JVM pass over the STORED minhash
     # (no signature UDF re-runs); restrict to buckets a fresh rep touches,
     # then to pairs with a fresh rep on >=1 side.
-    fresh_ids = out.read("s2_reps").join(
+    fresh_ids = reps.join(
         old_reps.select("rep_id"), "rep_id", "left_anti"
     ).select("rep_id")
     exploded = band_explode(reps.select("rep_id", "minhash"), cfg)
@@ -198,25 +183,15 @@ def dedup_pages_incremental(
             .filter(F.coalesce("fa", F.lit(False)) | F.coalesce("fb", F.lit(False)))
             .select("id_a", "id_b")
         )
-        signed_all = reps.select("rep_id", "norm_text", "simhash", "minhash")
-        delta_verified = verify_pairs(
-            cand_new, signed_all, cfg, n_payload_rows=reps.count()
-        )
-        out.write(old_edges.unionByName(delta_verified), "s3_edges")
-        # stats materialized as a side effect of the s3 write — same
-        # post-action fold the batch pipeline uses
-        row = bucket_stats.agg(
-            F.sum(F.col("capped").cast("int")).alias("capped"),
-            F.max("bucket_size").alias("biggest"),
-        ).collect()[0]
-        report.stage(
+        edges = pipe._stage(
             "s3_edges",
-            n_capped_buckets=int(row["capped"] or 0),
-            max_bucket_size=row["biggest"],
+            lambda: old_edges.unionByName(pipe._verify(cand_new, reps)),
+            force=True,
         )
+        # stats materialized as a side effect of the s3 write
+        pipe._record_bucket_stats(bucket_stats)
     finally:
         bucket_stats.unpersist()
-    edges = out.read("s3_edges")
     delta_verified = edges.join(
         old_edges.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti"
     )
@@ -225,12 +200,13 @@ def dedup_pages_incremental(
     contraction = old_cc.select(
         F.col("rep_id").alias("id_a"), F.col("cluster_id").alias("id_b")
     )
-    cc = connected_components(
-        delta_verified.select("id_a", "id_b").unionByName(contraction), cfg
+    cc = pipe._stage(
+        "s4_cc",
+        lambda: connected_components(
+            delta_verified.select("id_a", "id_b").unionByName(contraction), cfg
+        ),
+        force=True,
     )
-    out.write(cc, "s4_cc")
-    cc = out.read("s4_cc")
-    report.stage("s4_cc", rows=cc.count())
 
     # ---- s5: re-vote only affected clusters ------------------------------
     new_assign = (
@@ -270,7 +246,8 @@ def dedup_pages_incremental(
     vanished = moved.select(F.col("old_cluster_id").alias("cluster_id")).distinct()
 
     # containment scores for the affected members, over old + delta edges
-    aff_reps = new_assign.join(affected, "cluster_id").select("rep_id")
+    aff_assign = new_assign.join(affected, "cluster_id")
+    aff_reps = aff_assign.select("rep_id")
     aff_edges = (
         edges.join(aff_reps.withColumnRenamed("rep_id", "id_a"), "id_a", "left_semi")
         .unionByName(
@@ -280,39 +257,22 @@ def dedup_pages_incremental(
         )
         .distinct()
     )
+    aff_clusters = aff_assign.join(rep_containment(aff_edges), "rep_id", "left")
 
-    main_members = (
-        docs.filter(~F.col("bypass"))
-        .join(
-            new_assign.join(affected, "cluster_id"),
-            ["text_hash", "text_hash2"],
-        )
-        .join(rep_containment(aff_edges), "rep_id", "left")
-        .select(
-            "doc_id", "url", "warc_ts", "text", "lang", "text_hash",
-            "cluster_id", "containment",
-        )
-    )
     # new bypass docs are brand-new singleton clusters (old bypass rows
     # are untouched and carried over)
-    bypass_members = (
-        delta.filter(F.col("bypass"))
-        .select(
-            "doc_id", "url", "warc_ts", "text", "lang", "text_hash",
-            F.col("doc_id").alias("cluster_id"),
-            F.lit(None).cast("double").alias("containment"),
-        )
+    voted = vote_clusters(
+        docs.filter(~F.col("bypass")), aff_clusters,
+        delta.filter(F.col("bypass")), cfg,
     )
-    voted = consensus_vote(main_members.unionByName(bypass_members), cfg)
     carried = old_canon.join(
         affected.unionByName(vanished).distinct(), "cluster_id", "left_anti"
     )
-    out.write(carried.unionByName(voted.select(*old_canon.columns)), "s5_canonical")
-    canonical = out.read("s5_canonical")
-    report.stage(
+    canonical = pipe._stage(
         "s5_canonical",
-        rows=canonical.count(),
-        n_affected_clusters=affected.count(),
+        lambda: carried.unionByName(voted.select(*old_canon.columns)),
+        force=True,
     )
-    report.write(os.path.join(out_dir, "REPORT.json"))
+    pipe.report.stage("s5_canonical", n_affected_clusters=affected.count())
+    pipe._finalize(docs, reps, edges, canonical)
     return canonical

@@ -119,7 +119,8 @@ def bucketed_pairs(
     # unmaterialized lineage, and pinning `tagged` is not scale-safe
     # because it is corpus x bands sized).  Members arrive pre-sorted so
     # the nested transform emits exactly the (id_a < id_b) pairs the
-    # join produced.
+    # join produced; the strict filter after the explode drops the (x, x)
+    # pair an id listed twice in one bucket would otherwise expand to.
     small = tagged.filter(~F.col("capped"))
     members = F.array_sort(F.collect_list(id_col))
     pair_arr = F.flatten(
@@ -136,6 +137,7 @@ def bucketed_pairs(
         .agg(members.alias("ms"))
         .select(F.explode(pair_arr).alias("p"))
         .select("p.id_a", "p.id_b")
+        .filter(F.col("id_a") < F.col("id_b"))
     )
 
     # capped mega-buckets: anchor-star ∪ per-bucket random-order chain,

@@ -165,22 +165,25 @@ def attach_pair_payload(
     ``pairs`` must have (id_a, id_b, *extra_cols); ``payload`` must have
     (id_col, value_col).  Output: (id_a, id_b, *extra_cols, out_a, out_b).
     """
+    # internal column names: longer than every caller column name, so none
+    # can collide with them
+    pre = "_" * (1 + max(len(c) for c in [*pairs.columns, out_a, out_b]))
+    rid, v, side = pre + "rid", pre + "v", pre + "side"
+    vals = payload.select(F.col(id_col).alias(rid), F.col(value_col).alias(v))
     if payload_rows is not None and payload_rows <= broadcast_max_rows:
         # ONE broadcast relation joined twice (a-side and b-side): the two
         # broadcast subtrees are canonically identical, so ReuseExchange
         # builds and ships the payload hash relation ONCE — the previous
         # per-side aliased selects made the subtrees differ and the
         # (payload-sized) broadcast was collected and shipped twice.
-        bv = F.broadcast(
-            payload.select(F.col(id_col).alias("rid"), F.col(value_col).alias("v"))
-        )
+        bv = F.broadcast(vals)
         return (
-            pairs.join(bv, F.col("id_a") == F.col("rid"))
-            .drop("rid")
-            .withColumnRenamed("v", out_a)
-            .join(bv, F.col("id_b") == F.col("rid"))
-            .drop("rid")
-            .withColumnRenamed("v", out_b)
+            pairs.join(bv, F.col("id_a") == F.col(rid))
+            .drop(rid)
+            .withColumnRenamed(v, out_a)
+            .join(bv, F.col("id_b") == F.col(rid))
+            .drop(rid)
+            .withColumnRenamed(v, out_b)
             .select("id_a", "id_b", *extra_cols, out_a, out_b)
         )
 
@@ -191,21 +194,20 @@ def attach_pair_payload(
         *extra_cols,
         F.explode(
             F.array(
-                F.struct(F.lit("a").alias("side"), F.col("id_a").alias("rid")),
-                F.struct(F.lit("b").alias("side"), F.col("id_b").alias("rid")),
+                F.struct(F.lit("a").alias(side), F.col("id_a").alias(rid)),
+                F.struct(F.lit("b").alias(side), F.col("id_b").alias(rid)),
             )
-        ).alias("s"),
-    ).select("id_a", "id_b", *extra_cols, "s.side", "s.rid")
-    vals = payload.select(F.col(id_col).alias("rid"), F.col(value_col).alias("v"))
+        ).alias(pre),
+    ).select("id_a", "id_b", *extra_cols, f"{pre}.*")
     # exactly one non-null per (pair, side), so first(ignorenulls) is
     # deterministic — and works for any payload type (string, array, ...)
     return (
-        sides.join(vals, "rid")
+        sides.join(vals, rid)
         .repartition(par, "id_a", "id_b")
         .groupBy("id_a", "id_b")
         .agg(
-            F.first(F.when(F.col("side") == "a", F.col("v")), ignorenulls=True).alias(out_a),
-            F.first(F.when(F.col("side") == "b", F.col("v")), ignorenulls=True).alias(out_b),
+            F.first(F.when(F.col(side) == "a", F.col(v)), ignorenulls=True).alias(out_a),
+            F.first(F.when(F.col(side) == "b", F.col(v)), ignorenulls=True).alias(out_b),
             *[F.first(c).alias(c) for c in extra_cols],
         )
     )

@@ -15,11 +15,17 @@ Two materialization modes (``checkpoint=``):
 
 * ``"stages"`` (default) — every stage snapshots to the work table and is
   read back; crash/re-run resumes mid-pipeline without recomputation.  The
-  production mode for multi-hour 100 TB jobs.
+  production mode for multi-hour 100 TB jobs.  Stage row counts are
+  observed metrics of the snapshot write, not count jobs.
 * ``"memory"``  — stages materialize via ``localCheckpoint`` (executor
-  memory/disk), no write + read-back cycles and no per-stage row-count
-  jobs.  ~2× less fixed orchestration per run; for throughput benchmarking
+  memory/disk), no write + read-back cycles and no per-stage row counts.
+  ~2× less fixed orchestration per run; for throughput benchmarking
   and ephemeral runs where resume isn't worth the I/O.
+
+The daily merge (``delta.py``) writes its snapshots through the same
+``_stage``, builders and ``STAGE_COLUMNS`` schema, so both entry points
+write one ``REPORT.json`` schema: per-stage rows, ``s3_attach``,
+``s3_buckets``, ``summary`` and ``lineage``.
 
 Scale notes (the design is for 10^3 executors / 10^14 bytes):
 
@@ -41,7 +47,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from .config import DEFAULT_CONFIG, DedupConfig
 from .operators.components import connected_components
@@ -58,9 +64,20 @@ from .operators.metrics import RunReport, partition_and_size_stats
 from .operators.verify import verify_pairs
 from .sources import TableIO
 
-DOC_COLUMNS = [
-    "doc_id", "url", "warc_ts", "text", "lang", "text_hash", "text_hash2", "bypass",
-]
+# One snapshot schema: the columns every reader of a stage snapshot relies
+# on (batch resume, the incremental merge's state reads).
+STAGE_COLUMNS = {
+    "s1_docs": ["doc_id", "url", "warc_ts", "text", "lang", "text_hash",
+                "text_hash2", "bypass"],
+    "s2_reps": ["text_hash", "text_hash2", "rep_id", "n_members", "norm_text",
+                "minhash", "simhash"],
+    "s3_edges": ["id_a", "id_b", "jaccard", "cont_a", "cont_b", "sim_hamming"],
+    "s4_cc": ["rep_id", "cluster_id"],
+    "s5_canonical": ["doc_id", "url", "warc_ts", "text", "lang", "cluster_id",
+                     "fr", "rr", "n_variants", "vote_ratio", "low_confidence"],
+}
+# per-doc columns a consensus-vote member carries besides its cluster
+_MEMBER_COLUMNS = ["doc_id", "url", "warc_ts", "text", "lang", "text_hash"]
 
 
 def _ensure_text(pages: DataFrame) -> DataFrame:
@@ -82,6 +99,50 @@ def _ensure_text(pages: DataFrame) -> DataFrame:
     return has_text.unionByName(needs)
 
 
+def read_snapshot(io: TableIO, name: str) -> DataFrame:
+    """Read stage snapshot ``name`` and fail FAST on a stale workdir: a
+    snapshot written by an older pipeline version reads cleanly here but
+    explodes mid-plan later with an opaque unresolved-column error."""
+    out = io.read(name)
+    missing = set(STAGE_COLUMNS[name]) - set(out.columns)
+    if missing:
+        raise ValueError(
+            f"stale workdir: snapshot '{name}' at {io.root} is "
+            f"missing columns {sorted(missing)} (written by an older "
+            f"pipeline version?). Wipe the workdir or re-run with "
+            f"force=True."
+        )
+    return out
+
+
+def build_docs(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """s1: doc ids, bypass routing and the exact text hash of every page."""
+    main, bypass = route(with_doc_ids(_ensure_text(pages)), cfg)
+    main = with_text_hash(main).withColumn("bypass", F.lit(False))
+    bypass = with_text_hash(bypass).withColumn("bypass", F.lit(True))
+    # html is dropped HERE and never read again
+    return main.unionByName(bypass).select(*STAGE_COLUMNS["s1_docs"])
+
+
+def vote_clusters(
+    main_docs: DataFrame, clusters: DataFrame, bypass_docs: DataFrame,
+    cfg: DedupConfig,
+) -> DataFrame:
+    """s5: consensus vote over cluster members.  Each main doc joins its
+    text's row in ``clusters`` ((text_hash, text_hash2) → (cluster_id,
+    containment)); docs without a row there are not voted.  Each bypass doc
+    is a singleton cluster of its own."""
+    main_members = main_docs.join(clusters, ["text_hash", "text_hash2"]).select(
+        *_MEMBER_COLUMNS, "cluster_id", "containment"
+    )
+    bypass_members = bypass_docs.select(
+        *_MEMBER_COLUMNS,
+        F.col("doc_id").alias("cluster_id"),
+        F.lit(None).cast("double").alias("containment"),
+    )
+    return consensus_vote(main_members.unionByName(bypass_members), cfg)
+
+
 class DedupPipeline:
     def __init__(
         self,
@@ -101,9 +162,7 @@ class DedupPipeline:
 
     # -- stages ------------------------------------------------------------
 
-    def _stage(
-        self, name: str, build, force: bool, expect_cols: list[str] | None = None
-    ) -> DataFrame:
+    def _stage(self, name: str, build, force: bool) -> DataFrame:
         if self.checkpoint == "memory":
             # materialize once in executor memory; no write/read-back and no
             # row-count job (each saved job is fixed latency at any scale).
@@ -116,37 +175,48 @@ class DedupPipeline:
             self.report.stage(name, resumed=False)
             return df
         if not force and self.io.exists(name):
-            out = self.io.read(name)
-            # Fail FAST on a stale workdir: a snapshot written by an older
-            # pipeline version resumes cleanly here but explodes mid-plan
-            # later with an opaque unresolved-column error.
-            missing = set(expect_cols or []) - set(out.columns)
-            if missing:
-                raise ValueError(
-                    f"stale workdir: snapshot '{name}' at {self.workdir} is "
-                    f"missing columns {sorted(missing)} (written by an older "
-                    f"pipeline version?). Wipe the workdir or re-run with "
-                    f"force=True."
-                )
+            out = read_snapshot(self.io, name)
             self.report.stage(name, resumed=True)
             return out
-        df = build()
-        self.io.write(df, name)
-        out = self.io.read(name)
-        self.report.stage(name, rows=out.count(), resumed=False)
-        return out
+        # the row count is an observed metric of the write itself: no
+        # count job over the read-back
+        rows = Observation()
+        self.io.write(build().observe(rows, F.count(F.lit(1)).alias("n")), name)
+        self.report.stage(name, rows=rows.get["n"], resumed=False)
+        return self.io.read(name)
+
+    def _verify(self, edges: DataFrame, reps: DataFrame) -> DataFrame:
+        """s3 verify of candidate ``edges`` against the s2 ``reps``."""
+        # exact reps count drives the broadcast-vs-fold text attach in
+        # verify_pairs: the s2 stage record in stages mode; in memory mode
+        # the count materializes the s2 localCheckpoint — work the next
+        # job would do anyway.
+        n_reps = self._recorded_rows("s2_reps", reps)
+        broadcast = n_reps <= self.cfg.attach_broadcast_max_rows
+        self.report.stage(
+            "s3_attach", n_reps=n_reps, mode="broadcast" if broadcast else "fold"
+        )
+        signed = reps.select("rep_id", "norm_text", "simhash", "minhash")
+        return verify_pairs(edges, signed, self.cfg, n_payload_rows=n_reps)
+
+    def _record_bucket_stats(self, bucket_stats: DataFrame) -> None:
+        """Fold the LSH bucket stats into the ``s3_buckets`` counters.  Run
+        it after s3 has materialized: the persisted stats were populated as
+        a side effect, so this is a tiny cached-scan job instead of a
+        standalone explode+groupBy job."""
+        row = bucket_stats.agg(
+            F.sum(F.col("capped").cast("int")).alias("capped"),
+            F.max("bucket_size").alias("biggest"),
+        ).collect()[0]
+        self.report.stage(
+            "s3_buckets",
+            n_capped_buckets=int(row["capped"] or 0),
+            max_bucket_size=row["biggest"],
+        )
 
     def run(self, pages: DataFrame, force: bool = False) -> DataFrame:
         cfg = self.cfg
-
-        def build_docs() -> DataFrame:
-            main, bypass = route(with_doc_ids(_ensure_text(pages)), cfg)
-            main = with_text_hash(main).withColumn("bypass", F.lit(False))
-            bypass = with_text_hash(bypass).withColumn("bypass", F.lit(True))
-            # html is dropped HERE and never read again
-            return main.unionByName(bypass).select(*DOC_COLUMNS)
-
-        docs = self._stage("s1_docs", build_docs, force, expect_cols=DOC_COLUMNS)
+        docs = self._stage("s1_docs", lambda: build_docs(pages, cfg), force)
 
         def build_reps() -> DataFrame:
             main = docs.filter(~F.col("bypass")).select(
@@ -158,48 +228,22 @@ class DedupPipeline:
             # project before the exchange)
             return with_signatures(
                 distinct_text_reps(main, cfg).drop("text"), cfg
-            ).select(
-                "text_hash", "text_hash2", "rep_id", "n_members",
-                "norm_text", "minhash", "simhash",
-            )
+            ).select(*STAGE_COLUMNS["s2_reps"])
 
-        reps = self._stage(
-            "s2_reps", build_reps, force,
-            expect_cols=["text_hash", "text_hash2", "rep_id", "n_members",
-                         "norm_text", "minhash", "simhash"],
-        )
+        reps = self._stage("s2_reps", build_reps, force)
 
         bucket_stats_holder: list[DataFrame] = []
 
         def build_edges() -> DataFrame:
-            signed = reps.select("rep_id", "norm_text", "simhash", "minhash")
-            # exact reps count drives the broadcast-vs-fold text attach in
-            # verify_pairs.  Cheap on both paths: parquet metadata count in
-            # stages mode; in memory mode the first action materializes the
-            # s2 localCheckpoint — work the next job would do anyway.
-            n_reps = reps.count()
-            self.report.stage(
-                "s3_attach",
-                n_reps=n_reps,
-                mode=(
-                    "broadcast"
-                    if n_reps <= cfg.attach_broadcast_max_rows
-                    else "fold"
-                ),
-            )
-            edges, bucket_stats = candidate_pairs(signed, cfg)
+            edges, bucket_stats = candidate_pairs(reps.select("rep_id", "minhash"), cfg)
             bucket_stats_holder.append(bucket_stats)
-            return verify_pairs(edges, signed, cfg, n_payload_rows=n_reps)
+            return self._verify(edges, reps)
 
         # try/finally owns the bucket-stats cache lifetime: a failure
         # between candidate_pairs and the post-s4 agg (e.g. a failed CC
         # job) must not leak the persist for the session lifetime.
         try:
-            verified = self._stage(
-                "s3_edges", build_edges, force,
-                expect_cols=["id_a", "id_b", "jaccard", "cont_a", "cont_b",
-                             "sim_hamming"],
-            )
+            verified = self._stage("s3_edges", build_edges, force)
 
             def build_cc() -> DataFrame:
                 return connected_components(
@@ -208,26 +252,14 @@ class DedupPipeline:
                     assume_distinct=True,
                 )
 
-            cc = self._stage(
-                "s4_cc", build_cc, force, expect_cols=["rep_id", "cluster_id"]
-            )
+            cc = self._stage("s4_cc", build_cc, force)
 
             # Bucket-stat metrics AFTER s4: by now s3 has materialized
             # (snapshot write, or CC's eager input checkpoint in memory
-            # mode), populating the persisted stats as a side effect — this
-            # agg is a tiny cached-scan job instead of a standalone
-            # explode+groupBy job sequenced before the stage action (one
-            # less barrier on the fixed-cost path).
+            # mode), so the fold reads the populated cache — one less
+            # barrier on the fixed-cost path.
             if bucket_stats_holder:
-                row = bucket_stats_holder[0].agg(
-                    F.sum(F.col("capped").cast("int")).alias("capped"),
-                    F.max("bucket_size").alias("biggest"),
-                ).collect()[0]
-                self.report.stage(
-                    "s3_buckets",
-                    n_capped_buckets=int(row["capped"] or 0),
-                    max_bucket_size=row["biggest"],
-                )
+                self._record_bucket_stats(bucket_stats_holder[0])
             else:
                 # s3 resumed from its snapshot, so the bucket stats were
                 # never recomputed this run — but this run REWRITES
@@ -256,30 +288,12 @@ class DedupPipeline:
                     "containment",
                 )
             )
-            main_members = (
-                docs.filter(~F.col("bypass"))
-                .join(rep_clusters, ["text_hash", "text_hash2"])
-                .select(
-                    "doc_id", "url", "warc_ts", "text", "lang", "text_hash",
-                    "cluster_id", "containment",
-                )
+            return vote_clusters(
+                docs.filter(~F.col("bypass")), rep_clusters,
+                docs.filter(F.col("bypass")), cfg,
             )
-            bypass_members = (
-                docs.filter(F.col("bypass"))
-                .select(
-                    "doc_id", "url", "warc_ts", "text", "lang", "text_hash",
-                    F.col("doc_id").alias("cluster_id"),
-                    F.lit(None).cast("double").alias("containment"),
-                )
-            )
-            members = main_members.unionByName(bypass_members)
-            return consensus_vote(members, cfg)
 
-        canonical = self._stage(
-            "s5_canonical", build_canonical, force,
-            expect_cols=["doc_id", "url", "warc_ts", "text", "lang", "cluster_id",
-                         "fr", "rr", "n_variants", "vote_ratio", "low_confidence"],
-        )
+        canonical = self._stage("s5_canonical", build_canonical, force)
         self._finalize(docs, reps, verified, canonical)
         return canonical
 

@@ -13,6 +13,8 @@ differ inside mega-buckets) is tested at partition level.
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -77,7 +79,20 @@ def test_incremental_equals_full_uncapped(spark, tmp_path):
     assert _partition(str(tmp_path / "inc"), spark) == _partition(
         str(tmp_path / "full"), spark
     )
+    # one REPORT.json schema: the merge reports the batch's stages, plus
+    # its affected-cluster count, and the same summary over old ∪ delta
+    rep_full = _report(tmp_path / "full")
+    rep_inc = _report(tmp_path / "inc")
+    assert set(rep_inc) == set(rep_full)
+    assert "n_affected_clusters" in rep_inc["s5_canonical"]
+    for key in ("docs_in", "docs_out", "distinct_texts"):
+        assert rep_inc["summary"][key] == rep_full["summary"][key], key
     full.unpersist()
+
+
+def _report(workdir):
+    with open(workdir / "REPORT.json") as f:
+        return json.load(f)["stages"]
 
 
 def test_incremental_state_chains_and_is_idempotent(spark, tmp_path):

@@ -3,7 +3,7 @@
 import pytest
 from pyspark.sql import Row, functions as F
 
-from gencore_spark import DedupPipeline, dedup_pages
+from gencore_spark import DedupPipeline, dedup_pages, dedup_pages_incremental
 from gencore_spark.config import DedupConfig
 from gencore_spark.fixtures import PAGES_COLUMNS, pages_with_truth
 from gencore_spark.functions.udfs import extract_text_udf
@@ -267,3 +267,8 @@ def test_stale_workdir_fails_fast(spark, tmp_path):
     shutil.move(str(tmp_path / "s1_old"), f"{workdir}/s1_docs")
     with pytest.raises(ValueError, match="stale workdir"):
         dedup_pages(spark, full.select(*PAGES_COLUMNS), workdir)
+    # the merge reads its state through the same check
+    with pytest.raises(ValueError, match="stale"):
+        dedup_pages_incremental(
+            spark, full.select(*PAGES_COLUMNS), workdir, str(tmp_path / "inc")
+        )

@@ -130,6 +130,16 @@ def test_attach_pair_payload_broadcast_cutover(spark):
         broadcast_max_rows=100,
     )
     assert "BroadcastHashJoin" not in explain_str(over)
+    # caller columns named like the attach's internals must not collide:
+    # an extra column `v` once raised AMBIGUOUS_REFERENCE on both paths
+    pairs_v = pairs.withColumn("v", F.col("id_a") * 10)
+    for kw in ({"payload_rows": 3, "broadcast_max_rows": 100}, {}):
+        out = attach_pair_payload(
+            pairs_v, pay, "norm_text", "ta", "tb", extra_cols=("v",), **kw
+        )
+        assert {(r.id_a, r.id_b): (r.v, r.ta, r.tb) for r in out.collect()} == {
+            (1, 2): (10, "x", "y"), (2, 3): (20, "y", "z"),
+        }
 
 
 def test_ngram_text_attach_is_fold_not_per_pair_join(spark):

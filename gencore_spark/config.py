@@ -69,15 +69,12 @@ class DedupConfig:
     # 64 keeps worst-case per-bucket pair cost at C(64,2)=2016 — the same
     # order as the reference's 1000-pair cluster guard (options.cpp:31).
     bucket_size_cap: int = 64
-    salt_buckets: int = 8         # salt fanout used when capping hot buckets
-    max_pairs_per_bucket: int = 50000  # hard guard on quadratic blowup
 
     # --- connected components ---
-    cc_max_iterations: int = 25   # large-star/small-star fixpoint bound
-    cc_checkpoint_every: int = 1  # localCheckpoint cadence (lineage truncation)
+    # large-star/small-star cycle bound; running out raises RuntimeError
+    cc_max_iterations: int = 25
 
     # --- execution ---
-    shuffle_partitions: int = 32
     # Arrow batch rows for pandas UDFs: bounds numpy peak memory per worker
     # (~8192 rows x ~2 KB text x in+out ≈ 30 MB/batch/worker).  Raised from
     # 2048 in round 6: fewer batch boundaries = fewer Arrow flushes and

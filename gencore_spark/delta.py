@@ -15,18 +15,23 @@ re-touches only what the delta can affect:
 * **LSH + verify** run only on buckets containing a fresh rep, and only
   for pairs with a fresh rep on at least one side — old×old pairs are
   already in the edge snapshot and cannot change;
-* **connected components** runs on the delta's verified pairs plus one
-  (rep → cluster) CONTRACTION edge per previously clustered rep: adding
-  edges can only merge components, never split them, so the old
-  assignment is a sound contraction of the old edge set, and because
-  ``cluster_id`` is the component's minimum node id, a merge
-  deterministically keeps the smaller of the merged cluster ids (min
-  over a union is the min of the mins — over THIS state's first-seen rep
-  ids; see the exactness paragraph below on how those relate to a full
-  recompute's ids);
-* **consensus vote** re-runs only for AFFECTED clusters — those that
-  gained a member, merged, or formed — and every other canonical row is
-  carried over from the previous snapshot byte-for-byte.
+* **connected components** runs on the delta graph CONTRACTED to old
+  cluster ids: each endpoint of a newly verified pair is replaced by its
+  old ``cluster_id`` (or kept, if it had none).  Adding edges can only
+  merge components, never split them, so the old assignment is a sound
+  contraction of the old edge set; and because ``cluster_id`` is the
+  component's minimum node id, the contracted component's minimum is the
+  merged cluster's minimum (min over a union is the min of the mins —
+  over THIS state's first-seen rep ids; see the exactness paragraph below
+  on how those relate to a full recompute's ids).  The small
+  ``node → new cluster`` map this yields relabels the old assignment,
+  and the rows of newly clustered reps are appended;
+* **consensus vote** re-runs only for AFFECTED clusters — the new
+  clusters of every text with a delta member.  Every contracted
+  component holds a fresh rep (each new pair has a fresh side), so merge
+  targets are among them.  Every other canonical row is carried over
+  from the previous snapshot byte-for-byte, except the rows of cluster
+  ids a merge made vanish.
 
 Exactness: for every uncapped bucket (the common case — candidate
 generation there is exhaustive all-pairs) the updated state equals a full
@@ -61,15 +66,23 @@ the batch's ``REPORT.json`` schema, plus
 ``s5_canonical.n_affected_clusters``.  Only merge logic lives here; it
 rebuilds ``out_dir`` on every call (no resume).
 
-I/O cost note: each updated table is expressed as ``old ∪ delta``.  Under
-an Iceberg catalog that union is an O(delta) metadata append — the new
-snapshot shares the old data files (``writeTo(...).append()`` on a
-branched table; only computing the delta rows costs work).  The sandbox's
+Cost model: each stage computes its delta-sized part ONCE and pins it
+(``localCheckpoint``) — the new docs, the freshly signed reps, the newly
+verified pairs, the CC map and the touched/affected clusters — and later
+steps read those pins instead of re-deriving them from the corpus-sized
+snapshots by anti-joins.  A join of a corpus-sized snapshot with a
+delta-sized set broadcasts the delta side, so the snapshot is scanned,
+not shuffled ("To Partition, or Not to Partition", SIGMOD'21).  Two kinds
+of join still build on a corpus-sized side: the re-delivery and
+seen-text anti-joins (s1, s2), and verify's signature and text attach
+(s3, the batch's size-adaptive broadcast-or-fold).  Signatures,
+bucketing, verify, CC and the vote are O(delta + touched).  Each updated
+table is written as ``old ∪ delta``: under an Iceberg catalog that union
+is an O(delta) metadata append — the new snapshot shares the old data
+files (``writeTo(...).append()`` on a branched table).  The sandbox's
 directory-of-parquet fallback has no shared-file snapshots, so there the
-union physically rewrites the table — O(corpus) sequential I/O per delta,
-narrow (no shuffle), a sandbox artifact of the fallback, not the model.
-Every OTHER cost in this job — signatures, bucketing, verify, CC, vote —
-is O(delta + touched), which is the point.
+union physically rewrites the table — O(corpus) sequential I/O per
+delta, narrow (no shuffle), an artifact of the fallback, not the model.
 """
 
 from __future__ import annotations
@@ -89,6 +102,24 @@ from .pipeline import (
     vote_clusters,
 )
 from .sources import TableIO
+
+_TEXT_KEY = ["text_hash", "text_hash2"]
+_BAND_KEY = ["band_id", "band_hash"]
+
+
+def _either_side_in(pairs: DataFrame, ids: DataFrame) -> DataFrame:
+    """Rows of ``pairs`` (id_a, id_b, ...) with ``id_a`` or ``id_b`` in the
+    small ``ids`` (unique rep_id): two broadcast probes, one pass, no
+    shuffle."""
+    ids = F.broadcast(ids.select("rep_id").withColumn("hit", F.lit(True)))
+    a = ids.select(F.col("rep_id").alias("id_a"), F.col("hit").alias("_ha"))
+    b = ids.select(F.col("rep_id").alias("id_b"), F.col("hit").alias("_hb"))
+    return (
+        pairs.join(a, "id_a", "left")
+        .join(b, "id_b", "left")
+        .filter(F.col("_ha").isNotNull() | F.col("_hb").isNotNull())
+        .select(*pairs.columns)
+    )
 
 
 def dedup_pages_incremental(
@@ -114,165 +145,173 @@ def dedup_pages_incremental(
         read_snapshot(old, s) for s in STAGE_COLUMNS
     )
     pipe = DedupPipeline(spark, out_dir, cfg)
+    # the delta-sized part of each stage, pinned (lazy localCheckpoint) by
+    # the stage that builds it; under AQE a pin runs its shuffles at once
+    # and its last stage in the first job that reads it
+    d: dict[str, DataFrame] = {}
 
     # ---- s1: append the delta -------------------------------------------
-    # re-delivered fetches (same url+warc_ts → same doc_id) are dropped
-    # BEFORE the write: without this anti-join a re-delivery would append
-    # duplicate rows to s1_docs, and the NEXT delta touching those clusters
-    # would double-count them in the vote (fr/n_variants inflation)
-    new_docs = build_docs(new_pages, cfg).join(
-        old_docs.select("doc_id"), "doc_id", "left_anti"
-    )
-    docs = pipe._stage("s1_docs", lambda: old_docs.unionByName(new_docs), force=True)
-    delta = docs.join(old_docs.select("doc_id"), "doc_id", "left_anti")
+    def build_s1() -> DataFrame:
+        # re-delivered fetches (same url+warc_ts → same doc_id) are dropped
+        # BEFORE the write: a re-delivery appended to s1_docs would make
+        # the NEXT delta touching those clusters double-count it in the
+        # vote (fr/n_variants inflation)
+        d["docs"] = (
+            build_docs(new_pages, cfg)
+            .join(old_docs.select("doc_id"), "doc_id", "left_anti")
+            .localCheckpoint(eager=False)
+        )
+        return old_docs.unionByName(d["docs"])
+
+    docs = pipe._stage("s1_docs", build_s1, force=True)
 
     # ---- s2: sign only never-seen texts ---------------------------------
-    delta_main = delta.filter(~F.col("bypass")).select(
-        "doc_id", "text", "text_hash", "text_hash2"
-    )
-    # per-text delta member counts (also used to refresh n_members)
-    delta_counts = delta_main.groupBy("text_hash", "text_hash2").agg(
-        F.count(F.lit(1)).alias("d_members")
-    )
-    fresh = distinct_text_reps(delta_main, cfg).join(
-        old_reps.select("text_hash", "text_hash2"),
-        ["text_hash", "text_hash2"],
-        "left_anti",
-    )
-    fresh_signed = with_signatures(fresh, cfg).select(*STAGE_COLUMNS["s2_reps"])
-    refreshed_old = (
-        old_reps.join(delta_counts, ["text_hash", "text_hash2"], "left")
-        .withColumn(
-            "n_members", F.col("n_members") + F.coalesce("d_members", F.lit(0))
+    def build_s2() -> DataFrame:
+        delta_main = d["docs"].filter(~F.col("bypass")).select(
+            "doc_id", "text", "text_hash", "text_hash2"
         )
-        .drop("d_members")
-        .select(*old_reps.columns)
-    )
-    reps = pipe._stage(
-        "s2_reps", lambda: refreshed_old.unionByName(fresh_signed), force=True
-    )
+        # one row per delta text; its n_members is the text's delta member
+        # count, which refreshes n_members and names the texts whose
+        # clusters the vote must revisit
+        delta_reps = distinct_text_reps(delta_main, cfg).localCheckpoint(eager=False)
+        d["counts"] = delta_reps.select(
+            *_TEXT_KEY, F.col("n_members").alias("d_members")
+        )
+        fresh = delta_reps.join(old_reps.select(*_TEXT_KEY), _TEXT_KEY, "left_anti")
+        d["reps"] = (
+            with_signatures(fresh.drop("text"), cfg)
+            .select(*STAGE_COLUMNS["s2_reps"])
+            .localCheckpoint(eager=False)
+        )
+        refreshed_old = (
+            old_reps.join(F.broadcast(d["counts"]), _TEXT_KEY, "left")
+            .withColumn(
+                "n_members", F.col("n_members") + F.coalesce("d_members", F.lit(0))
+            )
+            .select(*old_reps.columns)
+        )
+        return refreshed_old.unionByName(d["reps"])
+
+    reps = pipe._stage("s2_reps", build_s2, force=True)
+    fresh_ids = d["reps"].select("rep_id")
 
     # ---- s3: candidates only where a fresh rep can matter ----------------
-    # bands of ALL reps are a narrow JVM pass over the STORED minhash
-    # (no signature UDF re-runs); restrict to buckets a fresh rep touches,
-    # then to pairs with a fresh rep on >=1 side.
-    fresh_ids = reps.join(
-        old_reps.select("rep_id"), "rep_id", "left_anti"
-    ).select("rep_id")
-    exploded = band_explode(reps.select("rep_id", "minhash"), cfg)
-    touched = (
-        exploded.join(fresh_ids, "rep_id")
-        .select("band_id", "band_hash")
-        .distinct()
+    # the buckets a fresh rep falls in, from the fresh reps' bands alone;
+    # every rep's bands are a narrow JVM pass over the STORED minhash (no
+    # signature UDF re-runs), probed against them by broadcast; then only
+    # pairs with a fresh rep on >=1 side are verified
+    fresh_keys = band_explode(d["reps"].select("rep_id", "minhash"), cfg).select(
+        *_BAND_KEY
     )
     cand, bucket_stats = bucketed_pairs(
-        exploded.join(touched, ["band_id", "band_hash"]),
-        ["band_id", "band_hash"],
+        band_explode(reps.select("rep_id", "minhash"), cfg).join(
+            F.broadcast(fresh_keys), _BAND_KEY, "left_semi"
+        ),
+        _BAND_KEY,
         cfg.bucket_size_cap,
     )
     try:
-        is_fresh_a = fresh_ids.select(
-            F.col("rep_id").alias("id_a"), F.lit(True).alias("fa")
-        )
-        is_fresh_b = fresh_ids.select(
-            F.col("rep_id").alias("id_b"), F.lit(True).alias("fb")
-        )
-        cand_new = (
-            cand.join(is_fresh_a, "id_a", "left")
-            .join(is_fresh_b, "id_b", "left")
-            .filter(F.coalesce("fa", F.lit(False)) | F.coalesce("fb", F.lit(False)))
-            .select("id_a", "id_b")
-        )
-        edges = pipe._stage(
-            "s3_edges",
-            lambda: old_edges.unionByName(pipe._verify(cand_new, reps)),
-            force=True,
-        )
+        def build_s3() -> DataFrame:
+            d["edges"] = pipe._verify(
+                _either_side_in(cand, fresh_ids), reps
+            ).localCheckpoint(eager=False)
+            return old_edges.unionByName(d["edges"])
+
+        edges = pipe._stage("s3_edges", build_s3, force=True)
         # stats materialized as a side effect of the s3 write
         pipe._record_bucket_stats(bucket_stats)
     finally:
         bucket_stats.unpersist()
-    delta_verified = edges.join(
-        old_edges.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti"
-    )
 
-    # ---- s4: CC over delta edges + old-assignment contraction ------------
-    contraction = old_cc.select(
-        F.col("rep_id").alias("id_a"), F.col("cluster_id").alias("id_b")
-    )
-    cc = pipe._stage(
-        "s4_cc",
-        lambda: connected_components(
-            delta_verified.select("id_a", "id_b").unionByName(contraction), cfg
-        ),
-        force=True,
-    )
-
-    # ---- s5: re-vote only affected clusters ------------------------------
-    new_assign = (
-        reps.select("text_hash", "text_hash2", "rep_id")
-        .join(cc, "rep_id", "left")
-        .select(
-            "text_hash", "text_hash2", "rep_id",
-            F.coalesce("cluster_id", "rep_id").alias("cluster_id"),
+    # ---- s4: CC on the delta graph contracted to old cluster ids --------
+    def build_s4() -> DataFrame:
+        new_edges = d["edges"].select("id_a", "id_b")
+        ends = new_edges.select(F.col("id_a").alias("rep_id")).unionByName(
+            new_edges.select(F.col("id_b").alias("rep_id"))
         )
-    )
-    old_assign = (
-        old_reps.select("rep_id")
-        .join(old_cc, "rep_id", "left")
-        .select(
-            "rep_id", F.coalesce("cluster_id", "rep_id").alias("old_cluster_id")
+        # clustered endpoint → its old cluster id; any other endpoint
+        # stands for itself
+        old_of = (
+            old_cc.join(F.broadcast(ends), "rep_id", "left_semi")
+            .localCheckpoint(eager=False)
         )
-    )
-    moved = new_assign.join(old_assign, "rep_id").filter(
-        F.col("cluster_id") != F.col("old_cluster_id")
-    )
-    affected = (
-        # clusters holding a fresh rep
-        new_assign.join(fresh_ids, "rep_id").select("cluster_id")
-        # clusters that gained members of an already-known text
-        .unionByName(
-            new_assign.join(delta_counts, ["text_hash", "text_hash2"])
-            .select("cluster_id")
+        node = F.broadcast(old_of)
+        contracted = (
+            new_edges.join(node.withColumnRenamed("rep_id", "id_a"), "id_a", "left")
+            .select(F.coalesce("cluster_id", "id_a").alias("id_a"), "id_b")
+            .join(node.withColumnRenamed("rep_id", "id_b"), "id_b", "left")
+            .select("id_a", F.coalesce("cluster_id", "id_b").alias("id_b"))
+            .filter(F.col("id_a") != F.col("id_b"))
         )
-        # merge targets: the surviving (min) id of any merged component
-        .unionByName(moved.select("cluster_id"))
-        .distinct()
-    )
-    # merge SOURCES: ids that vanished in a merge.  A component merge moves
-    # every rep of the old cluster at once, so any old id seen in `moved`
-    # no longer names a cluster — its previous canonical row must not be
-    # carried over (it would sit next to the merged cluster's new row).
-    vanished = moved.select(F.col("old_cluster_id").alias("cluster_id")).distinct()
-
-    # containment scores for the affected members, over old + delta edges
-    aff_assign = new_assign.join(affected, "cluster_id")
-    aff_reps = aff_assign.select("rep_id")
-    aff_edges = (
-        edges.join(aff_reps.withColumnRenamed("rep_id", "id_a"), "id_a", "left_semi")
-        .unionByName(
-            edges.join(
-                aff_reps.withColumnRenamed("rep_id", "id_b"), "id_b", "left_semi"
+        # node → new cluster; the nodes are old cluster ids and reps that
+        # had no cluster
+        d["moves"] = connected_components(contracted, cfg).localCheckpoint(eager=False)
+        relabel = F.broadcast(
+            d["moves"].select(
+                F.col("rep_id").alias("cluster_id"), F.col("cluster_id").alias("new_id")
             )
         )
-        .distinct()
-    )
-    aff_clusters = aff_assign.join(rep_containment(aff_edges), "rep_id", "left")
+        relabelled = old_cc.join(relabel, "cluster_id", "left").select(
+            "rep_id", F.coalesce("new_id", "cluster_id").alias("cluster_id")
+        )
+        newly_clustered = d["moves"].join(
+            F.broadcast(old_of.select(F.col("cluster_id").alias("rep_id"))),
+            "rep_id", "left_anti",
+        )
+        return relabelled.unionByName(newly_clustered)
 
-    # new bypass docs are brand-new singleton clusters (old bypass rows
-    # are untouched and carried over)
-    voted = vote_clusters(
-        docs.filter(~F.col("bypass")), aff_clusters,
-        delta.filter(F.col("bypass")), cfg,
-    )
-    carried = old_canon.join(
-        affected.unionByName(vanished).distinct(), "cluster_id", "left_anti"
-    )
-    canonical = pipe._stage(
-        "s5_canonical",
-        lambda: carried.unionByName(voted.select(*old_canon.columns)),
-        force=True,
-    )
-    pipe.report.stage("s5_canonical", n_affected_clusters=affected.count())
+    cc = pipe._stage("s4_cc", build_s4, force=True)
+
+    # ---- s5: re-vote only affected clusters ------------------------------
+    def build_s5() -> DataFrame:
+        # every text with a delta member, with its new cluster; `single`
+        # marks a rep with no s4 row, which is a cluster of its own
+        touched_ids = reps.join(
+            F.broadcast(d["counts"].select(*_TEXT_KEY)), _TEXT_KEY, "left_semi"
+        ).select("rep_id")
+        touched_cc = cc.join(F.broadcast(touched_ids), "rep_id", "left_semi")
+        touched = (
+            touched_ids.join(F.broadcast(touched_cc), "rep_id", "left")
+            .select(
+                "rep_id",
+                F.coalesce("cluster_id", "rep_id").alias("cluster_id"),
+                F.col("cluster_id").isNull().alias("single"),
+            )
+            .localCheckpoint(eager=False)
+        )
+        affected = touched.select("cluster_id")
+        d["n_affected"] = affected.distinct().count()
+        # every member of an affected cluster: its clustered reps, plus the
+        # touched reps that are clusters of their own
+        assign = F.broadcast(
+            cc.join(F.broadcast(affected), "cluster_id", "left_semi").unionByName(
+                touched.filter("single").select("rep_id", "cluster_id")
+            )
+        )
+        # containment scores for the affected members, over old + delta edges
+        aff_clusters = (
+            reps.select(*_TEXT_KEY, "rep_id")
+            .join(assign, "rep_id")
+            .join(rep_containment(_either_side_in(edges, assign)), "rep_id", "left")
+            .localCheckpoint(eager=False)
+        )
+        # new bypass docs are brand-new singleton clusters (old bypass rows
+        # are untouched and carried over)
+        voted = vote_clusters(
+            docs.filter(~F.col("bypass")), F.broadcast(aff_clusters),
+            d["docs"].filter(F.col("bypass")), cfg,
+        )
+        # merge SOURCES: cluster ids that vanished in a merge; their old
+        # canonical rows must not sit next to the merged cluster's new row
+        vanished = d["moves"].filter(F.col("rep_id") != F.col("cluster_id")).select(
+            F.col("rep_id").alias("cluster_id")
+        )
+        carried = old_canon.join(
+            F.broadcast(affected.unionByName(vanished)), "cluster_id", "left_anti"
+        )
+        return carried.unionByName(voted.select(*old_canon.columns))
+
+    canonical = pipe._stage("s5_canonical", build_s5, force=True)
+    pipe.report.stage("s5_canonical", n_affected_clusters=d["n_affected"])
     pipe._finalize(docs, reps, edges, canonical)
     return canonical

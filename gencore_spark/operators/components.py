@@ -15,9 +15,16 @@ Per-round ops (all equi-joins + groupBy — shuffle on node id):
 * small-star: orient edges (a > b); for each a, m = min(N(a) ∪ {a});
   emit (v, m) for v in N(a) ∪ {a} \\ {m}.
 
-Convergence: the edge multiset fingerprint (count, xor-sum of pair hashes)
-is stable across a round.  ``localCheckpoint`` truncates lineage each round
-(the one place iterative lineage can blow up a long job).
+Convergence: small-star output points every edge at a smaller node, so
+it is the final labelling exactly when it is a star forest — every node
+has at most one outgoing edge, and no edge's target has an outgoing edge
+of its own.  One aggregation per cycle tests both; the loop stops on the
+cycle that reaches the forest, with no confirming cycle after it.  A
+forest test without the out-degree half is not enough: large-star on
+3-5, 3-6, 2-5, 1-6 gives 5→2, 5→3, 6→1, 6→3, and small-star then gives
+3→1, 3→2, 5→2, 6→1 — no target is a source, yet node 3 carries two
+labels.  ``localCheckpoint`` truncates lineage each round (the one place
+iterative lineage can blow up a long job).
 """
 
 from __future__ import annotations
@@ -53,13 +60,21 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return to_min.unionByName(self_to_min).distinct()
 
 
-def _fingerprint(edges: DataFrame) -> tuple[int, int]:
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        # mod a 1e9 prime before summing: ANSI-safe up to ~9e9 edges
-        F.sum(F.pmod(F.xxhash64("a", "b"), F.lit(1000000007))).alias("h"),
-    ).collect()[0]
-    return int(row["n"] or 0), int(row["h"] or 0)
+def _is_star_forest(edges: DataFrame) -> bool:
+    """True when the distinct, smaller-pointing ``edges`` form a star
+    forest: no node has two outgoing edges, and no node has both an
+    outgoing and an incoming edge."""
+    roles = edges.select(
+        F.col("a").alias("n"), F.lit(1).alias("out"), F.lit(0).alias("in")
+    ).unionByName(
+        edges.select(F.col("b").alias("n"), F.lit(0).alias("out"), F.lit(1).alias("in"))
+    )
+    bad = (
+        roles.groupBy("n")
+        .agg(F.sum("out").alias("out"), F.max("in").alias("in"))
+        .filter((F.col("out") > 1) | ((F.col("out") > 0) & (F.col("in") > 0)))
+    )
+    return bad.isEmpty()
 
 
 def connected_components(
@@ -95,39 +110,27 @@ def connected_components(
     ).filter(F.col("a") != F.col("b"))
     if not assume_distinct:
         cur = cur.distinct()
-    # lazy pin + input fingerprint: ONE job materializes the input AND
-    # yields the cycle-0 fingerprint, so (a) the former eager-checkpoint
-    # barrier job is folded into useful work, and (b) a graph that is
-    # ALREADY a star forest (exact-dup-heavy corpora) converges after a
-    # single confirming cycle instead of two — the star cycle's fixpoints
-    # are exactly the final forests (Kiveris et al.), so "cycle output
-    # fingerprint == previous fingerprint" is the same stop criterion
-    # whether "previous" is cycle k or the input.
+    # lazy pin: the first cycle's forest test materializes the input
     cur = cur.localCheckpoint(eager=False)
-    prev_fp = _fingerprint(cur)
 
-    # Checkpoint + fingerprint FUSED into one job per CYCLE: the checkpoint
-    # is lazy and the fingerprint collect is the action that materializes
-    # it.  Exactly one cycle per checkpoint, measured (round 6): each star
-    # references its input 3-4x, so an unpinned K-cycle chain duplicates
-    # the base plan ~12^K times and DRIVER-SIDE CATALYST PLANNING of the
-    # lazy checkpoint (Dataset.localCheckpoint compiles the physical plan
-    # eagerly) becomes the loop's dominant cost — the prior 2-cycle fusion
-    # spent 1.3-3.5s PLANNING each checkpoint (measured on a 6k-edge
-    # graph; the fingerprint jobs themselves were 0.1-0.2s), ~7s of a
-    # 7.5s query.  Per-cycle pinning keeps every planned tree ~12 leaves
-    # (0.1-0.3s) at the price of one extra driver trip per 2 cycles —
-    # the 5.2s -> 1.9s trade on the driver-bench CC query.
+    # Checkpoint + forest test FUSED into one job per CYCLE: both
+    # checkpoints are lazy and the test is the action that materializes
+    # them.  Pinning after EACH star (measured, round 6): each star
+    # references its input 3-4x, so an unpinned chain duplicates the base
+    # plan per star and DRIVER-SIDE CATALYST PLANNING of the lazy
+    # checkpoint (Dataset.localCheckpoint compiles the physical plan
+    # eagerly) becomes the loop's dominant cost — 1.3-3.5s per checkpoint
+    # on a 6k-edge graph with a 12-leaf tree, 0.1-0.3s with 3-4 leaves.
     for _ in range(cfg.cc_max_iterations):
-        # pin after EACH star: both checkpoints are lazy and materialize in
-        # the same fingerprint job, but each planned tree is now 3-4 leaves
-        # instead of 12 (planning is superlinear in tree size)
         cur = _large_star(cur).localCheckpoint(eager=False)
         cur = _small_star(cur).localCheckpoint(eager=False)
-        fp = _fingerprint(cur)
-        if fp == prev_fp:
+        if _is_star_forest(cur):
             break
-        prev_fp = fp
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in cc_max_iterations="
+            f"{cfg.cc_max_iterations} large-star/small-star cycles"
+        )
 
     # converged: edges form stars (node -> component min). Add the roots.
     assign = cur.select(F.col("a").alias("rep_id"), F.col("b").alias("cluster_id"))

@@ -32,15 +32,37 @@ from ..functions.shingle import shingle_hashes
 from ..functions.similarity import has_common_substring
 
 
-def _verify_udf(cfg: DedupConfig):
+class _ShingleMemo(dict):
+    """text → sorted unique shingle hashes, holding at most ``cap`` texts.
+
+    The cap is checked on every insert: once the memo is full it stops
+    growing, and further texts are shingled without being kept.  ~4k
+    entries x (text + shingle array) ≈ 75 MB per worker at most."""
+
+    def __init__(self, k: int, cap: int = 4096):
+        super().__init__()
+        self.k = k
+        self.cap = cap
+
+    def __call__(self, text: str) -> np.ndarray:
+        # keyed by the string itself: dict equality handles hash
+        # collisions, same amortized speed
+        s = self.get(text)
+        if s is None:
+            s = shingle_hashes(text, self.k)
+            if len(self) < self.cap:
+                self[text] = s
+        return s
+
+
+def _verify_udf(cfg: DedupConfig, memo: _ShingleMemo | None = None):
     # TASK-level shingle memo (closure state): the UDF closure is pickled
-    # by value per task, so this dict starts empty for each task and
+    # by value per task, so the memo starts empty for each task and
     # persists across that task's Arrow batches — near-dup clusters and
-    # anchor-star edges repeat one text across many pairs, and the
-    # per-batch memo was recomputing each text's shingles once per batch
-    # boundary.  Capped so a pathological partition cannot grow it
-    # unboundedly (~4k entries x (text + shingle array) ≈ 75 MB/worker).
-    memo: dict[str, np.ndarray] = {}
+    # anchor-star edges repeat one text across many pairs, and a
+    # per-batch memo recomputed each text's shingles once per batch
+    # boundary.
+    sh = memo if memo is not None else _ShingleMemo(cfg.shingle_k)
 
     @F.pandas_udf(
         T.StructType(
@@ -57,19 +79,6 @@ def _verify_udf(cfg: DedupConfig):
         lcs_ok = np.zeros(len(ta), dtype=bool)
         cont_a = np.empty(len(ta), dtype=np.float64)
         cont_b = np.empty(len(ta), dtype=np.float64)
-        k = cfg.shingle_k
-        if len(memo) > 4096:
-            memo.clear()
-
-        def sh(t: str) -> np.ndarray:
-            # keyed by the string itself: dict equality handles hash
-            # collisions, same amortized speed
-            s = memo.get(t)
-            if s is None:
-                s = shingle_hashes(t, k)
-                memo[t] = s
-            return s
-
         for i, (x, y) in enumerate(zip(ta, tb)):
             x = x or ""
             y = y or ""

@@ -46,6 +46,7 @@ Scale notes (the design is for 10^3 executors / 10^14 bytes):
 from __future__ import annotations
 
 import os
+import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
@@ -163,6 +164,16 @@ class DedupPipeline:
     # -- stages ------------------------------------------------------------
 
     def _stage(self, name: str, build, force: bool) -> DataFrame:
+        """Build, write and read back stage ``name``.  Its record's ``sec``
+        is the stage's own duration: build, write and read-back (in memory
+        mode only the build, as the stage runs inside later jobs)."""
+        t0 = time.perf_counter()
+
+        def record(**counters) -> None:
+            self.report.stage(
+                name, sec=round(time.perf_counter() - t0, 3), **counters
+            )
+
         if self.checkpoint == "memory":
             # materialize once in executor memory; no write/read-back and no
             # row-count job (each saved job is fixed latency at any scale).
@@ -172,18 +183,19 @@ class DedupPipeline:
             # is exactly what caps scaling efficiency (Amdahl: ~59s of
             # barriers/collects measured against a ~830s parallel part)
             df = build().localCheckpoint(eager=False)
-            self.report.stage(name, resumed=False)
+            record(resumed=False)
             return df
         if not force and self.io.exists(name):
             out = read_snapshot(self.io, name)
-            self.report.stage(name, resumed=True)
+            record(resumed=True)
             return out
         # the row count is an observed metric of the write itself: no
         # count job over the read-back
         rows = Observation()
         self.io.write(build().observe(rows, F.count(F.lit(1)).alias("n")), name)
-        self.report.stage(name, rows=rows.get["n"], resumed=False)
-        return self.io.read(name)
+        out = self.io.read(name)
+        record(rows=rows.get["n"], resumed=False)
+        return out
 
     def _verify(self, edges: DataFrame, reps: DataFrame) -> DataFrame:
         """s3 verify of candidate ``edges`` against the s2 ``reps``."""

@@ -1,7 +1,8 @@
 """Connected-components correctness on known graphs (Spark)."""
 
-from pyspark.sql import functions as F
+import pytest
 
+from gencore_spark.config import DedupConfig
 from gencore_spark.operators.components import connected_components
 
 
@@ -40,3 +41,58 @@ def test_cc_handles_negative_ids(spark):
     # xxhash64 ids are full-range signed longs
     out = _cc(spark, [(-5, 3), (3, -1)])
     assert out == {-5: -5, 3: -5, -1: -5}
+
+
+def _union_find(edge_list):
+    """Reference labelling: node → min node id of its component."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edge_list:
+        if a == b:
+            continue
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def test_cc_matches_union_find_oracle(spark):
+    import random
+
+    rng = random.Random(7)
+    path = list(range(1, 50))
+    rng.shuffle(path)
+    clique = [(a, b) for a in range(60, 68) for b in range(60, 68) if a < b]
+    graphs = {
+        # one probe of targets against sources stops here too early:
+        # small-star leaves 3→1 and 3→2, yet no target is a source
+        "two_parents": [(3, 5), (3, 6), (2, 5), (1, 6)],
+        "long_path": [(i, i + 1) for i in range(1, 64)],
+        "shuffled_path": list(zip(path, path[1:])),
+        "star_center_not_min": [(50, v) for v in (3, 70, 90, 51, 8)],
+        "clique": clique,
+        "several": clique + [(1, 2), (2, 3), (100, 101), (103, 102), (7, 300)],
+        "negative_ids": [(-9, 4), (4, -2), (-2, 11), (30, -30), (-31, 31)],
+        "dups_reversed": [(5, 9), (9, 5), (5, 9), (9, 12), (12, 9), (12, 12),
+                          (20, 21), (21, 20)],
+        "random": [(rng.randrange(80), rng.randrange(80)) for _ in range(60)],
+    }
+    for name, edge_list in graphs.items():
+        assert _cc(spark, edge_list) == _union_find(edge_list), name
+
+
+def test_cc_raises_when_cycles_run_out(spark):
+    df = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 40)], ["id_a", "id_b"]
+    )
+    with pytest.raises(RuntimeError, match="cc_max_iterations=1"):
+        connected_components(df, DedupConfig(cc_max_iterations=1))
+    out = connected_components(df).collect()
+    assert {r["cluster_id"] for r in out} == {1} and len(out) == 40

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from gencore_spark import dedup_pages, dedup_pages_incremental
 from gencore_spark.fixtures import PAGES_COLUMNS, pages_with_truth
+from gencore_spark.pipeline import STAGE_COLUMNS
 
 
 def _split(full):
@@ -87,6 +88,13 @@ def test_incremental_equals_full_uncapped(spark, tmp_path):
     assert "n_affected_clusters" in rep_inc["s5_canonical"]
     for key in ("docs_in", "docs_out", "distinct_texts"):
         assert rep_inc["summary"][key] == rep_full["summary"][key], key
+    # each stage records its own duration; together they fit in the run
+    for workdir in ("full", "inc"):
+        with open(tmp_path / workdir / "REPORT.json") as f:
+            report = json.load(f)
+        secs = [report["stages"][stage]["sec"] for stage in STAGE_COLUMNS]
+        assert all(sec >= 0 for sec in secs), (workdir, secs)
+        assert sum(secs) <= report["wall_sec"], (workdir, secs)
     full.unpersist()
 
 

@@ -224,3 +224,27 @@ def test_extract_text_numeric_character_references():
 def test_normalize_for_shingling():
     assert normalize_for_shingling("  Foo\t\tBAR\n baz  ") == "foo bar baz"
     assert normalize_for_shingling(None) == ""
+
+
+# ---------------------------------------------------------------- verify memo
+
+
+def test_verify_shingle_memo_capped_within_one_batch():
+    """The verify UDF's task-level shingle memo never holds more than its
+    cap, even when one Arrow batch carries more distinct texts than that;
+    texts past the cap are shingled unmemoized, with identical results."""
+    import pandas as pd
+
+    from gencore_spark.config import DEFAULT_CONFIG
+    from gencore_spark.operators.verify import _ShingleMemo, _verify_udf
+
+    k = DEFAULT_CONFIG.shingle_k
+    a = pd.Series([f"page {i} about alpha beta gamma delta" for i in range(20)])
+    b = pd.Series([f"page {i} about alpha beta gamma omega" for i in range(20)])
+    capped = _ShingleMemo(k, cap=8)
+    out = _verify_udf(DEFAULT_CONFIG, capped).func(a, b)
+    assert len(capped) == capped.cap
+    unbounded = _ShingleMemo(k, cap=10**6)
+    ref = _verify_udf(DEFAULT_CONFIG, unbounded).func(a, b)
+    assert len(unbounded) == 40
+    pd.testing.assert_frame_equal(out, ref)

@@ -405,7 +405,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             )
             .distinct()
         )
-        return connected_components(edges, assume_distinct=True).select(
+        return connected_components(edges).select(
             F.col("rep_id").alias("node"), "cluster_id"
         )
 
@@ -597,7 +597,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         pages = _e2e_pages(spark, sf_dir)
         workdir = tempfile.mkdtemp(prefix="gencore_e2e_")
-        out = dedup_pages(spark, pages, workdir, checkpoint="memory")
+        out = dedup_pages(spark, pages, workdir)
         return out.select(
             "url", "text", "lang", "fr", "rr", "n_variants",
             "vote_ratio", "low_confidence",
@@ -631,7 +631,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         delta = keyed.filter(SF.col("_h") == 0).drop("_h")
         state = tempfile.mkdtemp(prefix="gencore_inc_base_")
         out_dir = tempfile.mkdtemp(prefix="gencore_inc_out_")
-        dedup_pages(spark, base, state)  # stages mode: state snapshots
+        dedup_pages(spark, base, state)
         out = dedup_pages_incremental(spark, delta, state, out_dir)
         return out.select(
             "url", "text", "lang", "fr", "rr", "n_variants",
@@ -643,9 +643,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def pages_dedup_fixture_e2e(spark, sf_dir):
         # The seeded fixture corpus (planted skew/exact/near/mirror/unique
         # structure at higher dup density than the documents-derived e2e).
-        # Oracle'd via the closed-form ground truth: the full pipeline runs
-        # (memory mode — resume machinery is pytest'd elsewhere; the driver
-        # should not pay snapshot write/read-back for a correctness row),
+        # Oracle'd via the closed-form ground truth: the full pipeline runs,
         # canonicals join back to the generator's truth sidecar on
         # (url, warc_ts), and the per-kind summary must equal
         # _FIXTURE_E2E_EXPECTED — which tests/test_fixture_oracle.py
@@ -662,8 +660,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         full, _spec = pages_with_truth(spark, _FIXTURE_E2E_N)
         workdir = tempfile.mkdtemp(prefix="gencore_e2e_")
-        out = dedup_pages(spark, full.select(*PAGES_COLUMNS), workdir,
-                          checkpoint="memory")
+        out = dedup_pages(spark, full.select(*PAGES_COLUMNS), workdir)
         truth = full.select("url", "warc_ts", "dup_kind")
         return (
             out.join(truth, ["url", "warc_ts"])

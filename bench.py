@@ -79,11 +79,9 @@ def run_headline_rep(cpus: int, pages_path: str, workdir: str) -> None:
     # zero; folding them into the measured wall misattributes JVM/daemon
     # startup as pipeline throughput (same rationale as excluding corpus
     # generation, and as the per-query loop's session warmup below).
-    dedup_pages(
-        spark, pages.limit(2000), workdir + "_warm", checkpoint="memory"
-    ).count()
+    dedup_pages(spark, pages.limit(2000), workdir + "_warm").count()
     t0 = time.time()
-    out = dedup_pages(spark, pages, workdir, checkpoint="memory")
+    out = dedup_pages(spark, pages, workdir)
     n_out = out.count()
     wall = time.time() - t0
     print(json.dumps({"wall_sec": round(wall, 3), "n_canonical": n_out}))

@@ -51,11 +51,11 @@ pick a different (equally valid) canonical.  This is the documented price
 of never re-verifying old pairs; the batch pipeline's own capped buckets
 carry the same per-run randomization note (``operators/lsh.py``).
 
-State layout: ``state_dir`` must hold the five ``stages``-mode snapshots
-of a previous :func:`gencore_spark.dedup_pages` (or incremental) run; the
-updated snapshots are written to ``out_dir`` (the old state is never
-mutated — snapshot-in/snapshot-out, the Iceberg model), which is itself a
-valid state for the next delta.
+State layout: ``state_dir`` must hold the five snapshots of a previous
+:func:`gencore_spark.dedup_pages` or merge run; the updated snapshots are
+written to ``out_dir`` (the old state is never mutated — snapshot-in/
+snapshot-out, the Iceberg model), which is itself a valid state for the
+next delta.
 
 Shared with the batch (``pipeline.py``): the snapshot schema and its
 stale-state check (``STAGE_COLUMNS``, ``read_snapshot``), the s1 builder
@@ -138,8 +138,8 @@ def dedup_pages_incremental(
     if missing:
         raise ValueError(
             f"state_dir {state_dir} is not a complete dedup state: "
-            f"missing snapshots {missing} (run dedup_pages with "
-            f"checkpoint='stages' first)"
+            f"missing snapshots {missing} (point it at the workdir of a "
+            f"previous dedup_pages or merge run)"
         )
     old_docs, old_reps, old_edges, old_cc, old_canon = (
         read_snapshot(old, s) for s in STAGE_COLUMNS

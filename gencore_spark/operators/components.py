@@ -78,20 +78,15 @@ def _is_star_forest(edges: DataFrame) -> bool:
 
 
 def connected_components(
-    edges: DataFrame, cfg: DedupConfig | None = None,
-    assume_distinct: bool = False,
+    edges: DataFrame, cfg: DedupConfig | None = None
 ) -> DataFrame:
     """edges (id_a, id_b) → assignment (rep_id, cluster_id).
 
     ``cluster_id`` is the minimum node id of the component (deterministic,
     resume-stable).  Every node appearing in ``edges`` gets a row; isolated
-    nodes are the caller's concern (they keep their own id).
-
-    ``assume_distinct`` — caller attests the edge rows are already unique
-    (e.g. they come from a ``distinct()`` candidate set that a verify
-    stage only FILTERED): skips the input dedup shuffle.  The output is
-    identical either way; duplicates would only inflate intermediate row
-    counts, never change the fixpoint.
+    nodes are the caller's concern (they keep their own id).  Duplicate
+    or reversed input edges need no dedup: the first large-star takes one
+    min per node and ends in ``distinct()``.
     """
     cfg = cfg or DEFAULT_CONFIG
     # Node ids are type-agnostic: any hashable + orderable Spark type works
@@ -101,17 +96,15 @@ def connected_components(
     # Materialize the input ONCE before iterating: every star round
     # references its input 2-3x, so an unmaterialized upstream (e.g. the
     # full signature+verify tree) would be recomputed ~(2-3)^rounds times.
-    # Eager localCheckpoint (not lazy persist): truncating the physical
-    # plan each cycle keeps per-round stage latency flat — a measured 6x
-    # per-round difference on this host versus persist-chained lineage.
-    cur = edges.select(
-        F.col("id_a").alias("a"),
-        F.col("id_b").alias("b"),
-    ).filter(F.col("a") != F.col("b"))
-    if not assume_distinct:
-        cur = cur.distinct()
-    # lazy pin: the first cycle's forest test materializes the input
-    cur = cur.localCheckpoint(eager=False)
+    # localCheckpoint (not persist): truncating the physical plan each
+    # cycle keeps per-round stage latency flat — a measured 6x per-round
+    # difference versus persist-chained lineage.  The pin is lazy: the
+    # first cycle's forest test materializes the input.
+    cur = (
+        edges.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
+        .filter(F.col("a") != F.col("b"))
+        .localCheckpoint(eager=False)
+    )
 
     # Checkpoint + forest test FUSED into one job per CYCLE: both
     # checkpoints are lazy and the test is the action that materializes

@@ -123,8 +123,7 @@ def minhash_lsh_clusters(
         # remaining lazy reference (fan-out) only reads (th1, th2, rep_id),
         # which column-prunes the signature UDF away entirely (plan-tested),
         # so the recompute is one cheap groupBy.
-        cc = connected_components(verified.select("id_a", "id_b"), cfg,
-                                  assume_distinct=True)
+        cc = connected_components(verified.select("id_a", "id_b"), cfg)
     finally:
         for c in caches:
             c.unpersist()
@@ -175,7 +174,7 @@ def simhash_clusters(
             .filter(F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))) <= max_hamming)
             .select("id_a", "id_b")
         )
-        cc = connected_components(pairs, cfg, assume_distinct=True)  # eager: materializes the caches
+        cc = connected_components(pairs, cfg)  # eager: materializes the caches
     finally:
         for c in caches:
             c.unpersist()
@@ -258,7 +257,7 @@ def ngram_jaccard_clusters(
             .filter(F.col("j") >= tau)
             .select("id_a", "id_b")
         )
-        cc = connected_components(verified, cfg, assume_distinct=True)  # eager: materializes the caches
+        cc = connected_components(verified, cfg)  # eager: materializes the caches
     finally:
         for c in caches:
             c.unpersist()
@@ -308,7 +307,7 @@ def embedding_cosine_clusters(
             .filter(F.col("cos") >= tau)
             .select("id_a", "id_b")
         )
-        cc = connected_components(pairs, cfg, assume_distinct=True)  # eager: materializes the caches
+        cc = connected_components(pairs, cfg)  # eager: materializes the caches
     finally:
         for c in caches:
             c.unpersist()

@@ -1,9 +1,9 @@
 """End-to-end near-dup dedup + consensus pipeline with checkpoint/resume.
 
-Stage DAG (each stage materializes exactly once; a re-run in snapshot mode
-skips every stage whose snapshot exists — the resumability the reference
-gets from its coordinate watermark, ``gencore.cpp:318-390``, re-expressed
-as table snapshots):
+Stage DAG (each stage materializes exactly once; a re-run skips every
+stage whose snapshot exists — the resumability the reference gets from its
+coordinate watermark, ``gencore.cpp:318-390``, re-expressed as table
+snapshots):
 
     pages ──► s1_docs      ids, routing, exact text_hash        (exact.py)
           ──► s2_reps      distinct texts + MinHash/SimHash     (exact.py)
@@ -11,16 +11,9 @@ as table snapshots):
           ──► s4_cc        connected components                 (components)
           ──► s5_canonical consensus vote + bypass re-union     (consensus)
 
-Two materialization modes (``checkpoint=``):
-
-* ``"stages"`` (default) — every stage snapshots to the work table and is
-  read back; crash/re-run resumes mid-pipeline without recomputation.  The
-  production mode for multi-hour 100 TB jobs.  Stage row counts are
-  observed metrics of the snapshot write, not count jobs.
-* ``"memory"``  — stages materialize via ``localCheckpoint`` (executor
-  memory/disk), no write + read-back cycles and no per-stage row counts.
-  ~2× less fixed orchestration per run; for throughput benchmarking
-  and ephemeral runs where resume isn't worth the I/O.
+Every stage snapshots to the work table and is read back, so a crashed or
+re-run job resumes mid-pipeline without recomputation.  Stage row counts
+are observed metrics of the snapshot write, not count jobs.
 
 The daily merge (``delta.py``) writes its snapshots through the same
 ``_stage``, builders and ``STAGE_COLUMNS`` schema, so both entry points
@@ -146,27 +139,19 @@ def vote_clusters(
 
 class DedupPipeline:
     def __init__(
-        self,
-        spark: SparkSession,
-        workdir: str,
-        cfg: DedupConfig = DEFAULT_CONFIG,
-        checkpoint: str = "stages",
+        self, spark: SparkSession, workdir: str, cfg: DedupConfig = DEFAULT_CONFIG
     ):
-        if checkpoint not in ("stages", "memory"):
-            raise ValueError(f"checkpoint must be 'stages' or 'memory': {checkpoint}")
         self.spark = spark
         self.cfg = cfg
         self.io = TableIO(spark, workdir)
         self.workdir = workdir
-        self.checkpoint = checkpoint
         self.report = RunReport()
 
     # -- stages ------------------------------------------------------------
 
     def _stage(self, name: str, build, force: bool) -> DataFrame:
         """Build, write and read back stage ``name``.  Its record's ``sec``
-        is the stage's own duration: build, write and read-back (in memory
-        mode only the build, as the stage runs inside later jobs)."""
+        is the stage's own duration: build, write and read-back."""
         t0 = time.perf_counter()
 
         def record(**counters) -> None:
@@ -174,17 +159,6 @@ class DedupPipeline:
                 name, sec=round(time.perf_counter() - t0, 3), **counters
             )
 
-        if self.checkpoint == "memory":
-            # materialize once in executor memory; no write/read-back and no
-            # row-count job (each saved job is fixed latency at any scale).
-            # eager=False: the checkpoint materializes inside the NEXT job
-            # that touches it instead of running its own barrier job — one
-            # fewer driver round trip per stage, and the per-run fixed cost
-            # is exactly what caps scaling efficiency (Amdahl: ~59s of
-            # barriers/collects measured against a ~830s parallel part)
-            df = build().localCheckpoint(eager=False)
-            record(resumed=False)
-            return df
         if not force and self.io.exists(name):
             out = read_snapshot(self.io, name)
             record(resumed=True)
@@ -200,9 +174,8 @@ class DedupPipeline:
     def _verify(self, edges: DataFrame, reps: DataFrame) -> DataFrame:
         """s3 verify of candidate ``edges`` against the s2 ``reps``."""
         # exact reps count drives the broadcast-vs-fold text attach in
-        # verify_pairs: the s2 stage record in stages mode; in memory mode
-        # the count materializes the s2 localCheckpoint — work the next
-        # job would do anyway.
+        # verify_pairs: the s2 stage record, or a count of the snapshot
+        # when s2 was resumed.
         n_reps = self._recorded_rows("s2_reps", reps)
         broadcast = n_reps <= self.cfg.attach_broadcast_max_rows
         self.report.stage(
@@ -258,18 +231,13 @@ class DedupPipeline:
             verified = self._stage("s3_edges", build_edges, force)
 
             def build_cc() -> DataFrame:
-                return connected_components(
-                    verified.select("id_a", "id_b"), cfg,
-                    # candidate edges were distinct; verify only filters
-                    assume_distinct=True,
-                )
+                return connected_components(verified.select("id_a", "id_b"), cfg)
 
             cc = self._stage("s4_cc", build_cc, force)
 
-            # Bucket-stat metrics AFTER s4: by now s3 has materialized
-            # (snapshot write, or CC's eager input checkpoint in memory
-            # mode), so the fold reads the populated cache — one less
-            # barrier on the fixed-cost path.
+            # Bucket-stat metrics AFTER s4: by now the s3 snapshot write
+            # has materialized them, so the fold reads the populated cache
+            # — one less barrier on the fixed-cost path.
             if bucket_stats_holder:
                 self._record_bucket_stats(bucket_stats_holder[0])
             else:
@@ -338,19 +306,6 @@ class DedupPipeline:
         return rows if rows is not None else df.count()
 
     def _finalize(self, docs, reps, verified, canonical) -> None:
-        if self.checkpoint == "memory":
-            # light report: one count job total (dup_rate needs both ends;
-            # docs_in is one cheap scan of the checkpointed s1)
-            n_docs = docs.count()
-            n_out = canonical.count()
-            self.report.stage(
-                "summary",
-                docs_in=n_docs,
-                docs_out=n_out,
-                dup_rate=round(1.0 - n_out / max(n_docs, 1), 6),
-            )
-            self.report.write(os.path.join(self.workdir, "REPORT.json"))
-            return
         n_docs = self._recorded_rows("s1_docs", docs)
         n_out = self._recorded_rows("s5_canonical", canonical)
         self.report.stage(
@@ -377,9 +332,6 @@ def dedup_pages(
     workdir: str,
     cfg: DedupConfig = DEFAULT_CONFIG,
     force: bool = False,
-    checkpoint: str = "stages",
 ) -> DataFrame:
     """One-call entry: pages(url, warc_ts, html, text, lang) → canonical."""
-    return DedupPipeline(spark, workdir, cfg, checkpoint=checkpoint).run(
-        pages, force=force
-    )
+    return DedupPipeline(spark, workdir, cfg).run(pages, force=force)

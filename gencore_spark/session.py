@@ -37,9 +37,9 @@ PIPELINE_CONFS: dict[str, str] = {
     # means 117.8s vs 130.9s.  Set on BOTH driver and executor so a real
     # cluster run matches the verified local-mode (driver==executor) JVM.
     # Width-dependent GC thread pinning is appended by get_spark (see
-    # _jvm_sizing) — the heap ladder A/B (tools/gc_ab.py, BENCH/
-    # BASELINE.md round-4 sections) measured ergonomic GC threads + the
-    # old fixed 48g local heap as a 2.2x wall regression at 32 cores.
+    # _jvm_sizing) — the heap ladder A/B (BENCH/BASELINE.md round-4
+    # sections) measured ergonomic GC threads + the old fixed 48g local
+    # heap as a 2.2x wall regression at 32 cores.
     "spark.driver.extraJavaOptions": "-XX:+UseParallelGC",
     "spark.executor.extraJavaOptions": "-XX:+UseParallelGC",
 }
@@ -53,7 +53,7 @@ def _jvm_sizing(cores: int) -> tuple[str, str]:
     fixed 48g through round 3) is an anti-model: ParallelGC scavenge cost
     scales with young-gen size, and a young gen sized for 48g blows the
     LLC so every GC is a memory-bandwidth storm that stalls all 32
-    mutator threads.  Measured ladder (tools/gc_ab.py, 300k pages,
+    mutator threads.  Measured ladder (BENCH/BASELINE.md, 300k pages,
     32 affinity-bound cores, fresh JVM per variant, task-metric
     decomposition via the driver REST API):
 
@@ -90,7 +90,7 @@ def get_spark(
     # Default 1 task per slot suits the benchmarked small-per-core volumes
     # (60k pages / 32 cores: 2-3x partitions measured slightly worse, AQE
     # already coalesces).  At >=75k pages/core raise to 2x cores: the 600k/
-    # 8-core A/B (tools/gc_ab.py, BENCH/BASELINE.md 2026-08-19) measured
+    # 8-core A/B (BENCH/BASELINE.md 2026-08-19) measured
     # -20% wall and -72% GC CPU from halving task granularity - giant
     # tasks' allocation spikes drive GC storms and stage tails idle slots.
     shuffle = shuffle_partitions or int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", cores))

@@ -184,7 +184,7 @@ def test_html_only_rows_extracted_in_s1(spark, tmp_path):
         ("https://a/3", ts, None, None, "en"),  # nothing to extract -> dropped
     ]
     out = dedup_pages(spark, spark.createDataFrame(rows, schema),
-                      str(tmp_path / "w"), checkpoint="memory")
+                      str(tmp_path / "w"))
     got = out.collect()
     # html-extracted row and text row are byte-identical -> ONE canonical
     assert len(got) == 1 and got[0]["fr"] == 2 and got[0]["text"] == body
@@ -194,7 +194,7 @@ def test_html_only_rows_extracted_in_s1(spark, tmp_path):
         [(u, ts, h, l) for (u, ts, h, _t, l) in rows[:2]],
         "url string, warc_ts timestamp, html binary, lang string",
     )
-    out2 = dedup_pages(spark, no_text, str(tmp_path / "w2"), checkpoint="memory")
+    out2 = dedup_pages(spark, no_text, str(tmp_path / "w2"))
     got2 = out2.collect()
     assert {r["text"] for r in got2} == {body, "ignored"}
 

@@ -50,7 +50,6 @@ def test_spark_submit_py_files(spark, tmp_path):
             os.path.join(REPO, "tools", "submit_job.py"),
             "--input", pages_dir,
             "--workdir", str(tmp_path / "work"),
-            "--checkpoint", "stages",
         ],
         capture_output=True, text=True, timeout=420,
         cwd=str(tmp_path),  # NOT the repo: the zip must be self-sufficient

@@ -88,9 +88,10 @@ def run_level(cores: int, pages_path: str, workdir: str) -> None:
     # out to be the anti-pattern the Spark tuning guide warns about — at
     # 600k pages it produced 8 giant tasks whose allocation spikes drove
     # 350-400 s of GC CPU and a 0.92 slot occupancy on stage tails, both
-    # of which vanish at mult=2 (gc_ab 2026-08-19: wall 373→300 s, GC
-    # 387→109 s at the same heap).  Production guidance is 2-3 tasks per
-    # core; mult applies identically to BOTH legs so the ratio stays fair.
+    # of which vanish at mult=2 (BENCH/BASELINE.md 2026-08-19: wall
+    # 373→300 s, GC 387→109 s at the same heap).  Production guidance is
+    # 2-3 tasks per core; mult applies identically to BOTH legs so the
+    # ratio stays fair.
     mult = int(os.environ.get("SPARK_GRAFT_SHUFFLE_MULT", "1"))
     spark = get_spark(
         app_name=f"scaling-{cores}", master=f"local[{cores}]",
@@ -111,8 +112,7 @@ def run_level(cores: int, pages_path: str, workdir: str) -> None:
     # smaller wall).  Task-metric totals are snapshotted after the warmup
     # and subtracted so the decomposition covers the timed run only.
     if os.environ.get("SPARK_GRAFT_SKIP_WARMUP") != "1":
-        warm = dedup_pages(spark, pages.limit(2000), workdir + "_warm",
-                           checkpoint="memory")
+        warm = dedup_pages(spark, pages.limit(2000), workdir + "_warm")
         warm.count()
         # drop every JVM-side trace of the warmup before the timed window:
         # localCheckpoint blocks / broadcasts are freed via ContextCleaner
@@ -128,9 +128,7 @@ def run_level(cores: int, pages_path: str, workdir: str) -> None:
     load0 = os.getloadavg()[0]
     cpu0 = _tree_cpu_sec()
     t0 = time.time()
-    # memory mode: the scaling law being measured is the compute pipeline,
-    # not the snapshot-write I/O path (which is resume-only machinery)
-    out = dedup_pages(spark, pages, workdir, checkpoint="memory")
+    out = dedup_pages(spark, pages, workdir)
     n_out = out.count()
     wall = time.time() - t0
     # CPU sampled BEFORE spark.stop() so live workers are still in /proc;

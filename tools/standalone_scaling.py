@@ -140,7 +140,7 @@ def run_driver(n_exec: int, pages_path: str, workdir: str) -> None:
     n = pages.count()
     load0 = os.getloadavg()[0]
     t0 = time.time()
-    out = dedup_pages(spark, pages, workdir, checkpoint="memory")
+    out = dedup_pages(spark, pages, workdir)
     n_out = out.count()
     wall = time.time() - t0
     # executor CPU from the app status store: the cluster-mode analog of

@@ -55,10 +55,6 @@ def main(argv: list[str] | None = None) -> None:
                    "(url, warc_ts, html, lang[, text] columns)")
     p.add_argument("--workdir", help="stage-snapshot + report directory")
     p.add_argument("--output", help="optional canonical-docs parquet path")
-    p.add_argument("--checkpoint", choices=["stages", "memory"],
-                   default="stages",
-                   help="'stages' = resumable snapshots (default); "
-                   "'memory' = localCheckpoint fast path")
     p.add_argument("--min-cluster-size", type=int, default=None,
                    help="A7 gate: drop clusters smaller than this")
     p.add_argument("--state-dir", default=None,
@@ -124,8 +120,7 @@ def main(argv: list[str] | None = None) -> None:
             spark, pages, args.state_dir, args.workdir, cfg
         )
     else:
-        pipe = DedupPipeline(spark, args.workdir, cfg, checkpoint=args.checkpoint)
-        canonical = pipe.run(pages)
+        canonical = DedupPipeline(spark, args.workdir, cfg).run(pages)
     if args.output:
         canonical.write.mode("overwrite").parquet(args.output)
         n = spark.read.parquet(args.output).count()

@@ -596,12 +596,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from gencore_spark import dedup_pages
 
         pages = _e2e_pages(spark, sf_dir)
-        workdir = tempfile.mkdtemp(prefix="gencore_e2e_")
-        out = dedup_pages(spark, pages, workdir)
-        return out.select(
-            "url", "text", "lang", "fr", "rr", "n_variants",
-            "vote_ratio", "low_confidence",
-        )
+        # the row is pinned (eager localCheckpoint) before the snapshot
+        # dir it reads goes away with the ``with``
+        with tempfile.TemporaryDirectory(prefix="gencore_e2e_") as workdir:
+            out = dedup_pages(spark, pages, workdir)
+            return out.select(
+                "url", "text", "lang", "fr", "rr", "n_variants",
+                "vote_ratio", "low_confidence",
+            ).localCheckpoint()
 
     q["pages_dedup_e2e"] = pages_dedup_e2e
 
@@ -629,14 +631,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         base = keyed.filter(SF.col("_h") != 0).drop("_h")
         delta = keyed.filter(SF.col("_h") == 0).drop("_h")
-        state = tempfile.mkdtemp(prefix="gencore_inc_base_")
-        out_dir = tempfile.mkdtemp(prefix="gencore_inc_out_")
-        dedup_pages(spark, base, state)
-        out = dedup_pages_incremental(spark, delta, state, out_dir)
-        return out.select(
-            "url", "text", "lang", "fr", "rr", "n_variants",
-            "vote_ratio", "low_confidence",
-        )
+        with tempfile.TemporaryDirectory(prefix="gencore_inc_base_") as state, \
+                tempfile.TemporaryDirectory(prefix="gencore_inc_out_") as out_dir:
+            dedup_pages(spark, base, state)
+            out = dedup_pages_incremental(spark, delta, state, out_dir)
+            return out.select(
+                "url", "text", "lang", "fr", "rr", "n_variants",
+                "vote_ratio", "low_confidence",
+            ).localCheckpoint()
 
     q["pages_dedup_incremental_e2e"] = pages_dedup_incremental_e2e
 
@@ -659,19 +661,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from gencore_spark.fixtures import PAGES_COLUMNS, pages_with_truth
 
         full, _spec = pages_with_truth(spark, _FIXTURE_E2E_N)
-        workdir = tempfile.mkdtemp(prefix="gencore_e2e_")
-        out = dedup_pages(spark, full.select(*PAGES_COLUMNS), workdir)
         truth = full.select("url", "warc_ts", "dup_kind")
-        return (
-            out.join(truth, ["url", "warc_ts"])
-            .groupBy("dup_kind")
-            .agg(
-                F.count(F.lit(1)).alias("n_clusters"),
-                F.sum("fr").alias("n_docs"),
-                F.sum("rr").alias("sum_rr"),
-                F.sum(F.col("low_confidence").cast("int")).alias("n_low_conf"),
+        with tempfile.TemporaryDirectory(prefix="gencore_e2e_") as workdir:
+            out = dedup_pages(spark, full.select(*PAGES_COLUMNS), workdir)
+            return (
+                out.join(truth, ["url", "warc_ts"])
+                .groupBy("dup_kind")
+                .agg(
+                    F.count(F.lit(1)).alias("n_clusters"),
+                    F.sum("fr").alias("n_docs"),
+                    F.sum("rr").alias("sum_rr"),
+                    F.sum(F.col("low_confidence").cast("int")).alias("n_low_conf"),
+                )
+                .localCheckpoint()
             )
-        )
 
     q["pages_dedup_fixture_e2e"] = pages_dedup_fixture_e2e
 

@@ -24,7 +24,9 @@ forest test without the out-degree half is not enough: large-star on
 3-5, 3-6, 2-5, 1-6 gives 5→2, 5→3, 6→1, 6→3, and small-star then gives
 3→1, 3→2, 5→2, 6→1 — no target is a source, yet node 3 carries two
 labels.  ``localCheckpoint`` truncates lineage each round (the one place
-iterative lineage can blow up a long job).
+iterative lineage can blow up a long job); once a cycle's forest test has
+materialized its output, the generations it was built from are unpersisted,
+so a call leaves one pinned frame behind — the one its result reads.
 """
 
 from __future__ import annotations
@@ -77,6 +79,13 @@ def _is_star_forest(edges: DataFrame) -> bool:
     return bad.isEmpty()
 
 
+def _unpin(df: DataFrame) -> None:
+    """Drop the blocks of a ``localCheckpoint`` frame nothing reads any more
+    (no Spark job: the RDD is removed from the persisted set at once and its
+    blocks asynchronously)."""
+    df._jdf.logicalPlan().rdd().unpersist(False)
+
+
 def connected_components(
     edges: DataFrame, cfg: DedupConfig | None = None
 ) -> DataFrame:
@@ -114,10 +123,18 @@ def connected_components(
     # checkpoint (Dataset.localCheckpoint compiles the physical plan
     # eagerly) becomes the loop's dominant cost — 1.3-3.5s per checkpoint
     # on a 6k-edge graph with a 12-leaf tree, 0.1-0.3s with 3-4 leaves.
+    #
+    # The forest test reads every partition of the new small-star frame
+    # (its groupBy shuffles them all), so after it the frame's blocks are
+    # complete and the cycle's input and large-star frames are superseded.
     for _ in range(cfg.cc_max_iterations):
-        cur = _large_star(cur).localCheckpoint(eager=False)
-        cur = _small_star(cur).localCheckpoint(eager=False)
-        if _is_star_forest(cur):
+        prev = cur
+        large = _large_star(prev).localCheckpoint(eager=False)
+        cur = _small_star(large).localCheckpoint(eager=False)
+        done = _is_star_forest(cur)
+        _unpin(prev)
+        _unpin(large)
+        if done:
             break
     else:
         raise RuntimeError(

@@ -96,3 +96,28 @@ def test_cc_raises_when_cycles_run_out(spark):
         connected_components(df, DedupConfig(cc_max_iterations=1))
     out = connected_components(df).collect()
     assert {r["cluster_id"] for r in out} == {1} and len(out) == 40
+
+
+def test_cc_unpins_superseded_generations(spark):
+    """Each cycle pins two frames and the call pins its input; only the
+    frame the result reads may stay pinned once the call returns.  Checked
+    while the result is alive, so no GC or ContextCleaner timing enters."""
+    jsc = spark.sparkContext._jsc
+
+    def pins() -> set[int]:
+        rdds = jsc.getPersistentRDDs()
+        return {
+            int(k) for k in rdds.keySet().toArray()
+            if rdds.get(k).rdd().isLocallyCheckpointed()
+        }
+
+    # a 40-node path needs several large-star/small-star cycles
+    df = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 40)], ["id_a", "id_b"]
+    )
+    before = pins()
+    out = connected_components(df)
+    left = pins() - before
+    assert len(left) == 1, f"pinned frames left by one call: {sorted(left)}"
+    rows = out.collect()
+    assert {r["cluster_id"] for r in rows} == {1} and len(rows) == 40

@@ -425,46 +425,62 @@ def test_variants_release_caches(spark):
         "doc_id long, text string",
     )
 
-    def n_persisted() -> int:
-        # CC's localCheckpoint pins are not counted: they are released only
-        # when the ContextCleaner reaps them after a JVM GC, and Spark can
-        # keep the pins of the last call or two reachable for as long as
-        # the session idles (measured: a 40 s plateau of 2-5 pins with the
-        # cleaner idle), so their number says nothing about pile-up
+    def counts() -> tuple[int, int]:
+        # (explicit persists, CC's localCheckpoint pins), counted apart:
+        # ``unpersist()`` drops an explicit persist at once, and CC drops
+        # its superseded pins itself, but the pin its result reads goes
+        # only when the ContextCleaner reaps it after a JVM GC, and Spark
+        # can keep that pin of the last call or two reachable while the
+        # session idles
         rdds = spark.sparkContext._jsc.getPersistentRDDs()
-        return sum(
-            not rdds.get(k).rdd().isLocallyCheckpointed()
+        pins = sum(
+            rdds.get(k).rdd().isLocallyCheckpointed()
             for k in rdds.keySet().toArray()
         )
+        return rdds.size() - pins, pins
 
-    def n_cached(settled) -> int:
-        # force both GCs, then poll until ``settled(count, previous count)``
+    def settle(done) -> tuple[int, int]:
+        # force both GCs, then poll until ``done(counts, previous counts)``
         # (other session-scoped tests legitimately hold .cache()d
         # fixtures, so the floor is not 0)
         gc.collect()
-        prev = cnt = None
+        prev = cur = None
         for _ in range(30):
             spark.sparkContext._jvm.System.gc()
             time.sleep(0.3)
-            cnt = n_persisted()
-            if settled(cnt, prev):
+            cur = counts()
+            if done(cur, prev):
                 break
-            prev = cnt
-        return cnt
+            prev = cur
+        return cur
 
-    # without the pins in the count, no warm-up call is needed: ``base``
-    # is taken before the first call, so a persist that one call leaves
-    # behind (identical plans re-use one cache entry) also fails
-    base = n_cached(lambda cnt, prev: cnt == prev)
-    for _ in range(3):
+    def one_round():
         for fn in (minhash_lsh_clusters, simhash_clusters):
             fn(docs).count()
-    # wait for the bound itself, not for two equal readings: a real leak
-    # never drops below it and still fails after the 30 tries
-    after = n_cached(lambda cnt, _prev: cnt <= base + 2)
-    # the explicit persists (2 per variant call = 12 across the loop) must
-    # not pile up; slack of 2 covers one in-flight ContextCleaner batch
+
+    # ``base`` is read before the first call, so a persist that one call
+    # leaves behind (identical plans re-use one cache entry) also fails
+    base, _ = settle(lambda cur, prev: cur == prev)
+    one_round()
+    _, pins_1 = settle(lambda cur, prev: cur == prev)
+    one_round()
+    one_round()
+    # a call leaves one pin behind, so at most the last two calls' pins
+    # can still be reachable after a round -- a bound that does not grow
+    # with the rounds, while a pile-up adds one pin or more per call (4+
+    # over rounds 2-3)
+    pin_slack = 2
+    # wait for the bounds themselves, not for two equal readings: a real
+    # leak never drops below them and still fails after the 30 tries
+    after, pins_3 = settle(
+        lambda cur, _prev: cur[0] <= base + 2 and cur[1] <= pins_1 + pin_slack
+    )
+    # the explicit persists (2 per variant call = 12 across the rounds)
+    # must not pile up; slack of 2 covers one in-flight ContextCleaner batch
     assert after <= base + 2, f"cached RDDs grew {base} -> {after}"
+    assert pins_3 <= pins_1 + pin_slack, (
+        f"CC localCheckpoint pins grew {pins_1} -> {pins_3} over two rounds"
+    )
 
 
 def test_variant_fanout_prunes_signature_udf(spark):

@@ -23,9 +23,12 @@ re-touches only what the delta can affect:
   component's minimum node id, the contracted component's minimum is the
   merged cluster's minimum (min over a union is the min of the mins —
   over THIS state's first-seen rep ids; see the exactness paragraph below
-  on how those relate to a full recompute's ids).  The small
-  ``node → new cluster`` map this yields relabels the old assignment,
-  and the rows of newly clustered reps are appended;
+  on how those relate to a full recompute's ids).  The contracted graph
+  is delta-sized at any corpus size, so up to ``cc_driver_max_edges``
+  edges it is labelled by union-find on the driver (one bounded fetch),
+  and only a bigger delta runs the large-star/small-star rounds.  The
+  small ``node → new cluster`` map this yields relabels the old
+  assignment, and the rows of newly clustered reps are appended;
 * **consensus vote** re-runs only for AFFECTED clusters — the new
   clusters of every text with a delta member.  Every contracted
   component holds a fresh rep (each new pair has a fresh side), so merge
@@ -72,11 +75,15 @@ verified pairs, the CC map and the touched/affected clusters — and later
 steps read those pins instead of re-deriving them from the corpus-sized
 snapshots by anti-joins.  A join of a corpus-sized snapshot with a
 delta-sized set broadcasts the delta side, so the snapshot is scanned,
-not shuffled ("To Partition, or Not to Partition", SIGMOD'21).  Two kinds
-of join still build on a corpus-sized side: the re-delivery and
-seen-text anti-joins (s1, s2), and verify's signature and text attach
-(s3, the batch's size-adaptive broadcast-or-fold).  Signatures,
-bucketing, verify, CC and the vote are O(delta + touched).  Each updated
+not shuffled ("To Partition, or Not to Partition", SIGMOD'21).  Verify's
+payload is the same kind of join: the reps are semi-joined to a broadcast
+of the new pairs' endpoint ids, so the signature and text attach carry
+O(delta + touched) rows; the recorded s2 row count bounds that payload
+and drives the batch's broadcast-or-fold choice without a count job.  One
+kind of join still builds on a corpus-sized side: the re-delivery and
+seen-text anti-joins (s1, s2).  Signatures, bucketing, verify, CC and the
+vote are O(delta + touched); the delta-sized CC graph runs on the driver
+below ``cc_driver_max_edges`` edges.  Each updated
 table is written as ``old ∪ delta``: under an Iceberg catalog that union
 is an O(delta) metadata append — the new snapshot shares the old data
 files (``writeTo(...).append()`` on a branched table).  The sandbox's
@@ -87,7 +94,9 @@ delta, narrow (no shuffle), an artifact of the fallback, not the model.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from dataclasses import replace
+
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from .config import DEFAULT_CONFIG, DedupConfig
 from .operators.components import connected_components
@@ -212,9 +221,15 @@ def dedup_pages_incremental(
     )
     try:
         def build_s3() -> DataFrame:
-            d["edges"] = pipe._verify(
-                _either_side_in(cand, fresh_ids), reps
-            ).localCheckpoint(eager=False)
+            pairs = _either_side_in(cand, fresh_ids).localCheckpoint(eager=False)
+            # verify's payload: only the reps these pairs touch, by a
+            # broadcast of their (delta-sized) endpoint ids; the recorded
+            # s2 row count bounds it for the broadcast-vs-fold choice
+            ends = pairs.select(F.col("id_a").alias("rep_id")).unionByName(
+                pairs.select(F.col("id_b").alias("rep_id"))
+            )
+            payload = reps.join(F.broadcast(ends), "rep_id", "left_semi")
+            d["edges"] = pipe._verify(pairs, payload).localCheckpoint(eager=False)
             return old_edges.unionByName(d["edges"])
 
         edges = pipe._stage("s3_edges", build_s3, force=True)
@@ -263,6 +278,8 @@ def dedup_pages_incremental(
     cc = pipe._stage("s4_cc", build_s4, force=True)
 
     # ---- s5: re-vote only affected clusters ------------------------------
+    n_affected = Observation()
+
     def build_s5() -> DataFrame:
         # every text with a delta member, with its new cluster; `single`
         # marks a rep with no s4 row, which is a cluster of its own
@@ -280,7 +297,6 @@ def dedup_pages_incremental(
             .localCheckpoint(eager=False)
         )
         affected = touched.select("cluster_id")
-        d["n_affected"] = affected.distinct().count()
         # every member of an affected cluster: its clustered reps, plus the
         # touched reps that are clusters of their own
         assign = F.broadcast(
@@ -296,11 +312,17 @@ def dedup_pages_incremental(
             .localCheckpoint(eager=False)
         )
         # new bypass docs are brand-new singleton clusters (old bypass rows
-        # are untouched and carried over)
+        # are untouched and carried over).  The vote emits one row per
+        # cluster before its min_cluster_size gate, and a main cluster's
+        # canonical text is routed main, so the affected-cluster count is
+        # an observed metric of the s5 write, not a count job.
         voted = vote_clusters(
             docs.filter(~F.col("bypass")), F.broadcast(aff_clusters),
-            d["docs"].filter(F.col("bypass")), cfg,
-        )
+            d["docs"].filter(F.col("bypass")), replace(cfg, min_cluster_size=1),
+        ).observe(
+            n_affected,
+            F.count_if(F.length("text") >= cfg.min_text_len).alias("n"),
+        ).filter(F.col("fr") >= cfg.min_cluster_size)
         # merge SOURCES: cluster ids that vanished in a merge; their old
         # canonical rows must not sit next to the merged cluster's new row
         vanished = d["moves"].filter(F.col("rep_id") != F.col("cluster_id")).select(
@@ -312,6 +334,6 @@ def dedup_pages_incremental(
         return carried.unionByName(voted.select(*old_canon.columns))
 
     canonical = pipe._stage("s5_canonical", build_s5, force=True)
-    pipe.report.stage("s5_canonical", n_affected_clusters=d["n_affected"])
+    pipe.report.stage("s5_canonical", n_affected_clusters=n_affected.get["n"])
     pipe._finalize(docs, reps, edges, canonical)
     return canonical

@@ -1,12 +1,22 @@
-"""Stage 5: connected components — alternating large-star / small-star.
+"""Stage 5: connected components — union-find on the driver for small
+graphs, alternating large-star / small-star above that.
 
 Reference analog: greedy transitive UMI grouping (``cluster.cpp:55-100``) —
 gencore absorbs every pair within hamming<=d of the current top UMI and
 repeats, which computes exactly the connected components of the
-hamming-ball graph.  Ours computes CC of the verified-pair graph with the
-large-star/small-star algorithm (Kiveris et al., "Connected Components in
-MapReduce and Beyond", SoCC'14) — O(log n) rounds of pure DataFrame
-joins/aggregations, no driver-side graph state.
+hamming-ball graph.  Ours computes CC of the verified-pair graph.
+
+Size cutover (``DedupConfig.cc_driver_max_edges``, the same role as
+``attach_broadcast_max_rows``): one bounded fetch takes at most
+``bound + 1`` edges to the driver.  If the graph has no more than ``bound``
+edges, union-find with min-id roots labels it there and the result goes
+back through ``createDataFrame`` — a handful of Spark jobs instead of
+three AQE jobs per cycle.  Not distributing a small input is the argument
+of "To Partition, or Not to Partition" (SIGMOD'21).  Larger graphs — the
+10^14-byte design point — run the large-star/small-star algorithm
+(Kiveris et al., "Connected Components in MapReduce and Beyond",
+SoCC'14): O(log n) rounds of pure DataFrame joins/aggregations, no
+driver-side graph state.
 
 Per-round ops (all equi-joins + groupBy — shuffle on node id):
 
@@ -31,9 +41,34 @@ so a call leaves one pinned frame behind — the one its result reads.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import types as T
 
 from ..config import DEFAULT_CONFIG, DedupConfig
+
+
+def _union_find(pairs) -> dict:
+    """node → minimum node id of its component, for (a, b) pairs with
+    a != b.  Every root is its component's minimum: a union hangs the
+    larger root under the smaller one."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]  # path halving
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            if ra < rb:
+                parent[rb] = ra
+            else:
+                parent[ra] = rb
+    return {x: find(x) for x in parent}
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -94,13 +129,38 @@ def connected_components(
     ``cluster_id`` is the minimum node id of the component (deterministic,
     resume-stable).  Every node appearing in ``edges`` gets a row; isolated
     nodes are the caller's concern (they keep their own id).  Duplicate
-    or reversed input edges need no dedup: the first large-star takes one
-    min per node and ends in ``distinct()``.
+    or reversed input edges need no dedup: union-find ignores them, and
+    the first large-star takes one min per node and ends in ``distinct()``.
     """
     cfg = cfg or DEFAULT_CONFIG
-    # Node ids are type-agnostic: any hashable + orderable Spark type works
-    # (long for table-keyed graphs, struct(hi, lo) for the pipeline's
-    # 128-bit doc ids) — the star rounds only group, join, and min() them.
+    pairs = edges.select(F.col("id_a").alias("a"), F.col("id_b").alias("b")).filter(
+        F.col("a") != F.col("b")
+    )
+    # The driver path orders ids as Python ints, which is Spark's order for
+    # integral types only; any other id type always takes the star rounds.
+    id_type = pairs.schema["a"].dataType
+    bound = cfg.cc_driver_max_edges
+    if bound > 0 and isinstance(id_type, T.IntegralType):
+        # one bounded fetch, one Spark job: every task stops after bound + 1
+        # edges and the limit keeps bound + 1 of them; the tasks read in
+        # parallel (a coalesce(1) would run the caller's upstream in one)
+        fetched = pairs.limit(bound + 1).toArrow()
+        if fetched.num_rows <= bound:
+            labels = _union_find(
+                zip(fetched.column("a").to_pylist(), fetched.column("b").to_pylist())
+            )
+            schema = T.StructType([
+                T.StructField("rep_id", id_type), T.StructField("cluster_id", id_type)
+            ])
+            # one partition: a local table otherwise splits into up to
+            # defaultParallelism slices, one snapshot file each
+            return edges.sparkSession.createDataFrame(
+                pa.table({"rep_id": list(labels), "cluster_id": list(labels.values())}),
+                schema,
+            ).coalesce(1)
+
+    # Node ids are type-agnostic here: any hashable + orderable Spark type
+    # works — the star rounds only group, join, and min() them.
     #
     # Materialize the input ONCE before iterating: every star round
     # references its input 2-3x, so an unmaterialized upstream (e.g. the
@@ -109,11 +169,7 @@ def connected_components(
     # cycle keeps per-round stage latency flat — a measured 6x per-round
     # difference versus persist-chained lineage.  The pin is lazy: the
     # first cycle's forest test materializes the input.
-    cur = (
-        edges.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .localCheckpoint(eager=False)
-    )
+    cur = pairs.localCheckpoint(eager=False)
 
     # Checkpoint + forest test FUSED into one job per CYCLE: both
     # checkpoints are lazy and the test is the action that materializes

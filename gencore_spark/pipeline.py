@@ -13,7 +13,8 @@ snapshots):
 
 Every stage snapshots to the work table and is read back, so a crashed or
 re-run job resumes mid-pipeline without recomputation.  Stage row counts
-are observed metrics of the snapshot write, not count jobs.
+are observed metrics of the snapshot write, not count jobs, and the
+read-back declares the schema just written, so it infers none.
 
 The daily merge (``delta.py``) writes its snapshots through the same
 ``_stage``, builders and ``STAGE_COLUMNS`` schema, so both entry points
@@ -29,11 +30,13 @@ Scale notes (the design is for 10^3 executors / 10^14 bytes):
   (bucket groupBy + pair join) + the size-adaptive verify text attach
   (broadcast double-join = zero exchanges when the reps table fits the
   broadcast cap; explode+fold above it),
-  s4 O(log n) CC rounds, s5 three hash aggs (no windows) — all keyed on
+  s4 none below ``cc_driver_max_edges`` verified pairs (one bounded fetch,
+  union-find on the driver) and O(log n) large-star/small-star rounds
+  above it, s5 three hash aggs (no windows) — all keyed on
   ids or hashes, AQE handles skew inside the cap, the mega-bucket cap
   handles the rest;
-* ``localCheckpoint`` truncates CC lineage; stage materialization truncates
-  everything else.
+* ``localCheckpoint`` truncates the CC rounds' lineage; stage
+  materialization truncates everything else.
 """
 
 from __future__ import annotations
@@ -164,18 +167,21 @@ class DedupPipeline:
             record(resumed=True)
             return out
         # the row count is an observed metric of the write itself: no
-        # count job over the read-back
+        # count job over the read-back; the read-back declares the schema
+        # just written, so it runs no schema-inference job either
         rows = Observation()
-        self.io.write(build().observe(rows, F.count(F.lit(1)).alias("n")), name)
-        out = self.io.read(name)
+        built = build()
+        self.io.write(built.observe(rows, F.count(F.lit(1)).alias("n")), name)
+        out = self.io.read(name, schema=built.schema)
         record(rows=rows.get["n"], resumed=False)
         return out
 
     def _verify(self, edges: DataFrame, reps: DataFrame) -> DataFrame:
-        """s3 verify of candidate ``edges`` against the s2 ``reps``."""
-        # exact reps count drives the broadcast-vs-fold text attach in
-        # verify_pairs: the s2 stage record, or a count of the snapshot
-        # when s2 was resumed.
+        """s3 verify of candidate ``edges`` against the s2 ``reps`` (or the
+        subset of them the edges touch, as the merge passes)."""
+        # the reps count drives the broadcast-vs-fold text attach in
+        # verify_pairs: the s2 stage record (an upper bound for a subset),
+        # or a count of ``reps`` when s2 was resumed.
         n_reps = self._recorded_rows("s2_reps", reps)
         broadcast = n_reps <= self.cfg.attach_broadcast_max_rows
         self.report.stage(

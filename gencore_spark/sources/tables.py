@@ -18,6 +18,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class TableIO:
@@ -47,10 +48,14 @@ class TableIO:
         else:
             df.write.mode("overwrite").parquet(self._path(name))
 
-    def read(self, name: str) -> DataFrame:
+    def read(self, name: str, schema: StructType | None = None) -> DataFrame:
+        """Read table ``name``.  A parquet read infers its schema from the
+        files in a Spark job; a declared ``schema`` (the one the table was
+        just written with) skips it."""
         if self.iceberg:
             return self.spark.read.table(f"gencore.{name}")
-        return self.spark.read.parquet(self._path(name))
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self._path(name))
 
 
 def load_testdata(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -5,10 +5,13 @@ import pytest
 from gencore_spark.config import DedupConfig
 from gencore_spark.operators.components import connected_components
 
+# bound 0: every graph takes the distributed large-star/small-star rounds
+STARS = DedupConfig(cc_driver_max_edges=0)
 
-def _cc(spark, edge_list):
+
+def _cc(spark, edge_list, cfg=None):
     df = spark.createDataFrame(edge_list, ["id_a", "id_b"])
-    rows = connected_components(df).collect()
+    rows = connected_components(df, cfg).collect()
     return {r["rep_id"]: r["cluster_id"] for r in rows}
 
 
@@ -85,7 +88,9 @@ def test_cc_matches_union_find_oracle(spark):
         "random": [(rng.randrange(80), rng.randrange(80)) for _ in range(60)],
     }
     for name, edge_list in graphs.items():
-        assert _cc(spark, edge_list) == _union_find(edge_list), name
+        want = _union_find(edge_list)
+        assert _cc(spark, edge_list, STARS) == want, f"{name} (distributed)"
+        assert _cc(spark, edge_list) == want, f"{name} (driver)"
 
 
 def test_cc_raises_when_cycles_run_out(spark):
@@ -93,8 +98,10 @@ def test_cc_raises_when_cycles_run_out(spark):
         [(i, i + 1) for i in range(1, 40)], ["id_a", "id_b"]
     )
     with pytest.raises(RuntimeError, match="cc_max_iterations=1"):
-        connected_components(df, DedupConfig(cc_max_iterations=1))
-    out = connected_components(df).collect()
+        connected_components(
+            df, DedupConfig(cc_max_iterations=1, cc_driver_max_edges=0)
+        )
+    out = connected_components(df, STARS).collect()
     assert {r["cluster_id"] for r in out} == {1} and len(out) == 40
 
 
@@ -116,8 +123,112 @@ def test_cc_unpins_superseded_generations(spark):
         [(i, i + 1) for i in range(1, 40)], ["id_a", "id_b"]
     )
     before = pins()
-    out = connected_components(df)
+    out = connected_components(df, STARS)
     left = pins() - before
     assert len(left) == 1, f"pinned frames left by one call: {sorted(left)}"
     rows = out.collect()
     assert {r["cluster_id"] for r in rows} == {1} and len(rows) == 40
+
+
+def test_cc_driver_path_keeps_id_type(spark):
+    """The driver path hands back the input's id type: full-range negative
+    longs stay longs, and int ids stay ints."""
+    from pyspark.sql import types as T
+
+    lo, hi = -(2**63), 2**63 - 1
+    longs = spark.createDataFrame(
+        [(hi, -7), (-7, lo), (5, -3)], "id_a long, id_b long"
+    )
+    out = connected_components(longs)
+    assert out.schema["rep_id"].dataType == T.LongType()
+    assert out.schema["cluster_id"].dataType == T.LongType()
+    got = {r["rep_id"]: r["cluster_id"] for r in out.collect()}
+    assert got == {hi: lo, -7: lo, lo: lo, 5: -3, -3: -3}
+    ints = spark.createDataFrame([(4, -2), (-2, 9)], "id_a int, id_b int")
+    out = connected_components(ints)
+    assert out.schema["cluster_id"].dataType == T.IntegerType()
+    assert {r["rep_id"]: r["cluster_id"] for r in out.collect()} == {
+        4: -2, -2: -2, 9: -2
+    }
+
+
+def test_cc_driver_bound_is_a_cutover(spark):
+    """A graph with exactly ``cc_driver_max_edges`` edges is labelled on the
+    driver (no localCheckpoint pin); one edge more runs the star rounds,
+    which leave their result's pin behind.  Both label the same."""
+    jsc = spark.sparkContext._jsc
+
+    def pins() -> set[int]:
+        rdds = jsc.getPersistentRDDs()
+        return {
+            int(k) for k in rdds.keySet().toArray()
+            if rdds.get(k).rdd().isLocallyCheckpointed()
+        }
+
+    edges = [(i, i + 1) for i in range(1, 11)]
+    df = spark.createDataFrame(edges, ["id_a", "id_b"])
+    want = _union_find(edges)
+    for bound, n_pins in ((10, 0), (9, 1)):
+        before = pins()
+        out = connected_components(df, DedupConfig(cc_driver_max_edges=bound))
+        assert len(pins() - before) == n_pins, bound
+        assert {r["rep_id"]: r["cluster_id"] for r in out.collect()} == want
+
+
+def test_cc_paths_give_equal_stage_snapshots(spark, tmp_path):
+    """On a fixture batch and one merge into it, ``s4_cc`` and
+    ``s5_canonical`` are the same rows whichever CC path runs, and the
+    merge reports as affected the clusters of every text with a new doc."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from gencore_spark import dedup_pages, dedup_pages_incremental
+    from gencore_spark.fixtures import PAGES_COLUMNS, pages_with_truth
+
+    full, _ = pages_with_truth(spark, 300)
+    full = full.select(*PAGES_COLUMNS).cache()
+    h = F.pmod(F.xxhash64("url", "warc_ts"), F.lit(4))
+    # two new pages short enough to bypass dedup: singleton clusters the
+    # merge votes but does not count as affected
+    short = spark.createDataFrame(
+        [(f"https://short.example/{i}", None, None, "tiny", "en") for i in (1, 2)],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    ).select(*[F.col(c).cast(full.schema[c].dataType) for c in PAGES_COLUMNS])
+    base, delta = full.filter(h != 0), full.filter(h == 0).unionByName(short)
+
+    def rows(workdir, name):
+        df = spark.read.parquet(f"{workdir}/{name}")
+        return sorted(tuple(r) for r in df.select(*sorted(df.columns)).collect())
+
+    def affected(run):
+        key = ["text_hash", "text_hash2"]
+        new_docs = spark.read.parquet(f"{run}/merge/s1_docs").join(
+            spark.read.parquet(f"{run}/base/s1_docs").select("doc_id"),
+            "doc_id", "left_anti",
+        )
+        return (
+            spark.read.parquet(f"{run}/merge/s2_reps")
+            .join(new_docs.filter(~F.col("bypass")).select(*key), key, "left_semi")
+            .join(spark.read.parquet(f"{run}/merge/s4_cc"), "rep_id", "left")
+            .select(F.coalesce("cluster_id", "rep_id")).distinct().count()
+        )
+
+    snaps = {}
+    for label, cfg in (("stars", STARS), ("driver", DedupConfig())):
+        run = tmp_path / label
+        dedup_pages(spark, base, str(run / "base"), cfg)
+        dedup_pages_incremental(
+            spark, delta, str(run / "base"), str(run / "merge"), cfg
+        )
+        snaps[label] = {
+            (w, s): rows(str(run / w), s)
+            for w in ("base", "merge") for s in ("s4_cc", "s5_canonical")
+        }
+        with open(run / "merge" / "REPORT.json") as f:
+            reported = json.load(f)["stages"]["s5_canonical"]["n_affected_clusters"]
+        assert reported == affected(str(run)) > 0, label
+    full.unpersist()
+    for key, want in snaps["stars"].items():
+        assert want, key
+        assert snaps["driver"][key] == want, key

@@ -73,14 +73,6 @@ class DedupConfig:
     # --- connected components ---
     # large-star/small-star cycle bound; running out raises RuntimeError
     cc_max_iterations: int = 25
-    # Size cutover (operators/components.py): graphs with <= this many
-    # edges are labelled by union-find on the driver; bigger graphs (and
-    # 0, which disables the driver path) run the large-star/small-star
-    # rounds.  Measured on a 4-core local[4] host: at 10^5 edges the driver
-    # path took 0.46x the star rounds' time on a dedup-shaped graph and
-    # 0.09x on a random one, at 10^6 it lost on the dedup shape (1.2x);
-    # ~15 MB of driver memory at 10^5 edges.
-    cc_driver_max_edges: int = 100_000
 
     # --- execution ---
     # Arrow batch rows for pandas UDFs: bounds numpy peak memory per worker

@@ -24,11 +24,12 @@ re-touches only what the delta can affect:
   merged cluster's minimum (min over a union is the min of the mins —
   over THIS state's first-seen rep ids; see the exactness paragraph below
   on how those relate to a full recompute's ids).  The contracted graph
-  is delta-sized at any corpus size, so up to ``cc_driver_max_edges``
-  edges it is labelled by union-find on the driver (one bounded fetch),
-  and only a bigger delta runs the large-star/small-star rounds.  The
-  small ``node → new cluster`` map this yields relabels the old
-  assignment, and the rows of newly clustered reps are appended;
+  is delta-sized at any corpus size, so up to the CC cutover (100,000
+  edges, ``operators/components.py``) it is labelled by union-find on
+  the driver after one bounded fetch, and only a bigger delta runs the
+  large-star/small-star rounds.  The small ``node → new cluster`` map
+  this yields relabels the old assignment, and the rows of newly
+  clustered reps are appended;
 * **consensus vote** re-runs only for AFFECTED clusters — the new
   clusters of every text with a delta member.  Every contracted
   component holds a fresh rep (each new pair has a fresh side), so merge
@@ -77,30 +78,30 @@ snapshots by anti-joins.  A join of a corpus-sized snapshot with a
 delta-sized set broadcasts the delta side, so the snapshot is scanned,
 not shuffled ("To Partition, or Not to Partition", SIGMOD'21).  Verify's
 payload is the same kind of join: the reps are semi-joined to a broadcast
-of the new pairs' endpoint ids, so the signature and text attach carry
+of the new pairs' endpoint ids (two per pair, so it grows with the
+fresh-side candidate pairs), and the signature and text attach carry
 O(delta + touched) rows; the recorded s2 row count bounds that payload
 and drives the batch's broadcast-or-fold choice without a count job.  One
 kind of join still builds on a corpus-sized side: the re-delivery and
 seen-text anti-joins (s1, s2).  Signatures, bucketing, verify, CC and the
 vote are O(delta + touched); the delta-sized CC graph runs on the driver
-below ``cc_driver_max_edges`` edges.  Each updated
-table is written as ``old ∪ delta``: under an Iceberg catalog that union
-is an O(delta) metadata append — the new snapshot shares the old data
-files (``writeTo(...).append()`` on a branched table).  The sandbox's
-directory-of-parquet fallback has no shared-file snapshots, so there the
-union physically rewrites the table — O(corpus) sequential I/O per
-delta, narrow (no shuffle), an artifact of the fallback, not the model.
+up to the CC cutover.  Each updated table is written as ``old ∪ delta``:
+under an Iceberg catalog that union is an O(delta) metadata append — the
+new snapshot shares the old data files (``writeTo(...).append()`` on a
+branched table).  The sandbox's directory-of-parquet fallback has no
+shared-file snapshots, so there the union physically rewrites the table —
+O(corpus) sequential I/O per delta, narrow (no shuffle), an artifact of
+the fallback, not the model.
 """
 
 from __future__ import annotations
-
-from dataclasses import replace
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from .config import DEFAULT_CONFIG, DedupConfig
 from .operators.components import connected_components
-from .operators.exact import distinct_text_reps, with_signatures
+from .operators.consensus import size_gate
+from .operators.exact import distinct_text_reps, is_main, with_signatures
 from .operators.lsh import band_explode, bucketed_pairs
 from .operators.verify import rep_containment
 from .pipeline import (
@@ -223,8 +224,11 @@ def dedup_pages_incremental(
         def build_s3() -> DataFrame:
             pairs = _either_side_in(cand, fresh_ids).localCheckpoint(eager=False)
             # verify's payload: only the reps these pairs touch, by a
-            # broadcast of their (delta-sized) endpoint ids; the recorded
-            # s2 row count bounds it for the broadcast-vs-fold choice
+            # broadcast of their endpoint ids.  It holds both ids of every
+            # pair, duplicates included, so it grows with the fresh-side
+            # candidate pairs (up to bucket_size_cap^2 per touched bucket),
+            # not with the delta's reps.  The recorded s2 row count bounds
+            # the payload for the broadcast-vs-fold choice
             ends = pairs.select(F.col("id_a").alias("rep_id")).unionByName(
                 pairs.select(F.col("id_b").alias("rep_id"))
             )
@@ -312,17 +316,16 @@ def dedup_pages_incremental(
             .localCheckpoint(eager=False)
         )
         # new bypass docs are brand-new singleton clusters (old bypass rows
-        # are untouched and carried over).  The vote emits one row per
-        # cluster before its min_cluster_size gate, and a main cluster's
-        # canonical text is routed main, so the affected-cluster count is
-        # an observed metric of the s5 write, not a count job.
+        # are untouched and carried over).  Ungated, the vote emits one row
+        # per cluster, and a main cluster's canonical text is routed main,
+        # so the affected-cluster count is an observed metric of the s5
+        # write, not a count job; the size gate applies after it.
         voted = vote_clusters(
             docs.filter(~F.col("bypass")), F.broadcast(aff_clusters),
-            d["docs"].filter(F.col("bypass")), replace(cfg, min_cluster_size=1),
-        ).observe(
-            n_affected,
-            F.count_if(F.length("text") >= cfg.min_text_len).alias("n"),
-        ).filter(F.col("fr") >= cfg.min_cluster_size)
+            d["docs"].filter(F.col("bypass")), cfg, min_cluster_size=1,
+        ).observe(n_affected, F.count_if(is_main(cfg)).alias("n")).filter(
+            size_gate(cfg.min_cluster_size)
+        )
         # merge SOURCES: cluster ids that vanished in a merge; their old
         # canonical rows must not sit next to the merged cluster's new row
         vanished = d["moves"].filter(F.col("rep_id") != F.col("cluster_id")).select(

@@ -41,6 +41,13 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..config import DedupConfig
 
+
+def size_gate(min_cluster_size: int):
+    """The A7 ``supporting_reads`` gate on voted rows: the cluster has at
+    least ``min_cluster_size`` members."""
+    return F.col("fr") >= min_cluster_size
+
+
 def mirror_key(url_col="url"):
     """http/https, leading www., trailing slash folded — the duplex mirror
     key (the normalized-UMI-halves analog, ``cluster.cpp:246-258``)."""
@@ -133,7 +140,7 @@ def consensus_vote(
     )
     gate = min_cluster_size if min_cluster_size is not None else cfg.min_cluster_size
     if gate > 1:
-        out = out.filter(F.col("fr") >= gate)
+        out = out.filter(size_gate(gate))
     if has_text:
         out = out.drop("text_len").join(text_by_doc, "doc_id")
     return out

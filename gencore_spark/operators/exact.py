@@ -61,13 +61,19 @@ def with_doc_ids(pages: DataFrame) -> DataFrame:
     return pages.withColumn("doc_id", F.xxhash64("url", "warc_ts"))
 
 
+def is_main(cfg: DedupConfig):
+    """The routing rule on a non-empty ``text``: true when it is long
+    enough to be deduplicated, false when it bypasses dedup."""
+    return F.length("text") >= cfg.min_text_len
+
+
 def route(pages: DataFrame, cfg: DedupConfig) -> tuple[DataFrame, DataFrame]:
     """(main, bypass): docs shorter than ``min_text_len`` bypass dedup
     entirely (each is its own singleton cluster), mirroring the unmapped
     passthrough.  Null/empty text is dropped (the F1 filter)."""
     clean = pages.filter(F.col("text").isNotNull() & (F.length("text") > 0))
-    main = clean.filter(F.length("text") >= cfg.min_text_len)
-    bypass = clean.filter(F.length("text") < cfg.min_text_len)
+    main = clean.filter(is_main(cfg))
+    bypass = clean.filter(~is_main(cfg))
     return main, bypass
 
 

@@ -30,7 +30,7 @@ Scale notes (the design is for 10^3 executors / 10^14 bytes):
   (bucket groupBy + pair join) + the size-adaptive verify text attach
   (broadcast double-join = zero exchanges when the reps table fits the
   broadcast cap; explode+fold above it),
-  s4 none below ``cc_driver_max_edges`` verified pairs (one bounded fetch,
+  s4 none up to 100,000 verified pairs (the CC cutover: one bounded fetch,
   union-find on the driver) and O(log n) large-star/small-star rounds
   above it, s5 three hash aggs (no windows) — all keyed on
   ids or hashes, AQE handles skew inside the cap, the mega-bucket cap
@@ -123,12 +123,13 @@ def build_docs(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
 
 def vote_clusters(
     main_docs: DataFrame, clusters: DataFrame, bypass_docs: DataFrame,
-    cfg: DedupConfig,
+    cfg: DedupConfig, min_cluster_size: int | None = None,
 ) -> DataFrame:
     """s5: consensus vote over cluster members.  Each main doc joins its
     text's row in ``clusters`` ((text_hash, text_hash2) → (cluster_id,
     containment)); docs without a row there are not voted.  Each bypass doc
-    is a singleton cluster of its own."""
+    is a singleton cluster of its own.  ``min_cluster_size`` overrides the
+    config's size gate (``consensus_vote``)."""
     main_members = main_docs.join(clusters, ["text_hash", "text_hash2"]).select(
         *_MEMBER_COLUMNS, "cluster_id", "containment"
     )
@@ -137,7 +138,9 @@ def vote_clusters(
         F.col("doc_id").alias("cluster_id"),
         F.lit(None).cast("double").alias("containment"),
     )
-    return consensus_vote(main_members.unionByName(bypass_members), cfg)
+    return consensus_vote(
+        main_members.unionByName(bypass_members), cfg, min_cluster_size
+    )
 
 
 class DedupPipeline:

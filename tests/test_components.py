@@ -1,17 +1,26 @@
 """Connected-components correctness on known graphs (Spark)."""
 
+import contextlib
+
 import pytest
 
 from gencore_spark.config import DedupConfig
+from gencore_spark.operators import components
 from gencore_spark.operators.components import connected_components
 
-# bound 0: every graph takes the distributed large-star/small-star rounds
-STARS = DedupConfig(cc_driver_max_edges=0)
+
+@contextlib.contextmanager
+def driver_bound(n: int):
+    """Run with the driver-path cutover at ``n`` edges; 0 sends every
+    non-empty graph to the distributed large-star/small-star rounds."""
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(components, "_DRIVER_MAX_EDGES", n)
+        yield
 
 
-def _cc(spark, edge_list, cfg=None):
+def _cc(spark, edge_list):
     df = spark.createDataFrame(edge_list, ["id_a", "id_b"])
-    rows = connected_components(df, cfg).collect()
+    rows = connected_components(df).collect()
     return {r["rep_id"]: r["cluster_id"] for r in rows}
 
 
@@ -89,7 +98,8 @@ def test_cc_matches_union_find_oracle(spark):
     }
     for name, edge_list in graphs.items():
         want = _union_find(edge_list)
-        assert _cc(spark, edge_list, STARS) == want, f"{name} (distributed)"
+        with driver_bound(0):
+            assert _cc(spark, edge_list) == want, f"{name} (distributed)"
         assert _cc(spark, edge_list) == want, f"{name} (driver)"
 
 
@@ -97,11 +107,10 @@ def test_cc_raises_when_cycles_run_out(spark):
     df = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 40)], ["id_a", "id_b"]
     )
-    with pytest.raises(RuntimeError, match="cc_max_iterations=1"):
-        connected_components(
-            df, DedupConfig(cc_max_iterations=1, cc_driver_max_edges=0)
-        )
-    out = connected_components(df, STARS).collect()
+    with driver_bound(0):
+        with pytest.raises(RuntimeError, match="cc_max_iterations=1"):
+            connected_components(df, DedupConfig(cc_max_iterations=1))
+        out = connected_components(df).collect()
     assert {r["cluster_id"] for r in out} == {1} and len(out) == 40
 
 
@@ -123,7 +132,8 @@ def test_cc_unpins_superseded_generations(spark):
         [(i, i + 1) for i in range(1, 40)], ["id_a", "id_b"]
     )
     before = pins()
-    out = connected_components(df, STARS)
+    with driver_bound(0):
+        out = connected_components(df)
     left = pins() - before
     assert len(left) == 1, f"pinned frames left by one call: {sorted(left)}"
     rows = out.collect()
@@ -153,7 +163,7 @@ def test_cc_driver_path_keeps_id_type(spark):
 
 
 def test_cc_driver_bound_is_a_cutover(spark):
-    """A graph with exactly ``cc_driver_max_edges`` edges is labelled on the
+    """A graph with exactly ``_DRIVER_MAX_EDGES`` edges is labelled on the
     driver (no localCheckpoint pin); one edge more runs the star rounds,
     which leave their result's pin behind.  Both label the same."""
     jsc = spark.sparkContext._jsc
@@ -170,9 +180,36 @@ def test_cc_driver_bound_is_a_cutover(spark):
     want = _union_find(edges)
     for bound, n_pins in ((10, 0), (9, 1)):
         before = pins()
-        out = connected_components(df, DedupConfig(cc_driver_max_edges=bound))
+        with driver_bound(bound):
+            out = connected_components(df)
         assert len(pins() - before) == n_pins, bound
         assert {r["rep_id"]: r["cluster_id"] for r in out.collect()} == want
+
+
+def test_cc_runs_the_upstream_once_on_both_paths(spark):
+    """The bounded fetch reads the input's pin, and a graph above the bound
+    runs its star rounds on that same pin: the caller's upstream (here a
+    Python UDF, as verify's is) runs once per edge on either path."""
+    from pyspark.sql import functions as F
+
+    base = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 40)], ["id_a", "id_b"]
+    )
+    for bound in (components._DRIVER_MAX_EDGES, 9):
+        calls = spark.sparkContext.accumulator(0)
+
+        def tick(x, calls=calls):
+            calls.add(1)
+            return x
+
+        # nondeterministic: the optimizer may not duplicate it into the
+        # self-loop filter, so each evaluation is one upstream run
+        udf = F.udf(tick, "long").asNondeterministic()
+        with driver_bound(bound):
+            out = connected_components(base.select(udf("id_a").alias("id_a"), "id_b"))
+        rows = out.collect()
+        assert {r["cluster_id"] for r in rows} == {1} and len(rows) == 40, bound
+        assert calls.value == 39, bound
 
 
 def test_cc_paths_give_equal_stage_snapshots(spark, tmp_path):
@@ -215,12 +252,13 @@ def test_cc_paths_give_equal_stage_snapshots(spark, tmp_path):
         )
 
     snaps = {}
-    for label, cfg in (("stars", STARS), ("driver", DedupConfig())):
+    for label, bound in (("stars", 0), ("driver", components._DRIVER_MAX_EDGES)):
         run = tmp_path / label
-        dedup_pages(spark, base, str(run / "base"), cfg)
-        dedup_pages_incremental(
-            spark, delta, str(run / "base"), str(run / "merge"), cfg
-        )
+        with driver_bound(bound):
+            dedup_pages(spark, base, str(run / "base"))
+            dedup_pages_incremental(
+                spark, delta, str(run / "base"), str(run / "merge")
+            )
         snaps[label] = {
             (w, s): rows(str(run / w), s)
             for w in ("base", "merge") for s in ("s4_cc", "s5_canonical")

@@ -404,7 +404,7 @@ def test_bucketed_pairs_never_self_pairs(spark):
     assert got == [(1, 2)]
 
 
-def test_variants_release_caches(spark):
+def test_variants_release_caches(spark, monkeypatch):
     """Explicit persists inside the dedup variants are released before the
     variant returns (VERDICT r2 'unpersist discipline'): repeated calls in
     one session must not accumulate cached RDD blocks."""
@@ -413,7 +413,7 @@ def test_variants_release_caches(spark):
 
     from pyspark.sql import functions as F
 
-    from gencore_spark.config import DedupConfig
+    from gencore_spark.operators import components
     from gencore_spark.operators.dedup_variants import (
         exact_dedup,
         minhash_lsh_clusters,
@@ -456,11 +456,11 @@ def test_variants_release_caches(spark):
         return cur
 
     # bound 0: CC takes the star rounds, whose pins this test counts
-    cfg = DedupConfig(cc_driver_max_edges=0)
+    monkeypatch.setattr(components, "_DRIVER_MAX_EDGES", 0)
 
     def one_round():
-        minhash_lsh_clusters(docs, cfg).count()
-        simhash_clusters(docs, cfg=cfg).count()
+        for fn in (minhash_lsh_clusters, simhash_clusters):
+            fn(docs).count()
 
     # ``base`` is read before the first call, so a persist that one call
     # leaves behind (identical plans re-use one cache entry) also fails

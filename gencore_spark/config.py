@@ -28,7 +28,7 @@ true pairs.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -75,13 +75,6 @@ class DedupConfig:
     cc_max_iterations: int = 25
 
     # --- execution ---
-    # Arrow batch rows for pandas UDFs: bounds numpy peak memory per worker
-    # (~8192 rows x ~2 KB text x in+out ≈ 30 MB/batch/worker).  Raised from
-    # 2048 in round 6: fewer batch boundaries = fewer Arrow flushes and
-    # better shingle-memo locality (verify stage 7.9s -> 5.8s at 368k
-    # pairs from the batch size alone, A/B'd at 60k pages).
-    arrow_batch_rows: int = 8192
-    perm_chunk: int = 32          # perms hashed per numpy block
     # MinHash slots used by the JVM est-Jaccard verify gate.  zip_with/
     # aggregate HOFs are interpreted (not codegen'd), so the gate costs
     # ~slots lambda evals per pair; a 32-slot prefix keeps the same 3σ

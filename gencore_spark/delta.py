@@ -180,27 +180,19 @@ def dedup_pages_incremental(
         delta_main = d["docs"].filter(~F.col("bypass")).select(
             "doc_id", "text", "text_hash", "text_hash2"
         )
-        # one row per delta text; its n_members is the text's delta member
-        # count, which refreshes n_members and names the texts whose
-        # clusters the vote must revisit
+        # one row per delta text: the texts whose clusters the vote must
+        # revisit
         delta_reps = distinct_text_reps(delta_main, cfg).localCheckpoint(eager=False)
-        d["counts"] = delta_reps.select(
-            *_TEXT_KEY, F.col("n_members").alias("d_members")
-        )
+        d["texts"] = delta_reps.select(*_TEXT_KEY)
         fresh = delta_reps.join(old_reps.select(*_TEXT_KEY), _TEXT_KEY, "left_anti")
         d["reps"] = (
             with_signatures(fresh.drop("text"), cfg)
             .select(*STAGE_COLUMNS["s2_reps"])
             .localCheckpoint(eager=False)
         )
-        refreshed_old = (
-            old_reps.join(F.broadcast(d["counts"]), _TEXT_KEY, "left")
-            .withColumn(
-                "n_members", F.col("n_members") + F.coalesce("d_members", F.lit(0))
-            )
-            .select(*old_reps.columns)
-        )
-        return refreshed_old.unionByName(d["reps"])
+        # a pure append; the projection also reads a state whose s2_reps
+        # still carries columns this version no longer writes
+        return old_reps.select(*STAGE_COLUMNS["s2_reps"]).unionByName(d["reps"])
 
     reps = pipe._stage("s2_reps", build_s2, force=True)
     fresh_ids = d["reps"].select("rep_id")
@@ -288,7 +280,7 @@ def dedup_pages_incremental(
         # every text with a delta member, with its new cluster; `single`
         # marks a rep with no s4 row, which is a cluster of its own
         touched_ids = reps.join(
-            F.broadcast(d["counts"].select(*_TEXT_KEY)), _TEXT_KEY, "left_semi"
+            F.broadcast(d["texts"]), _TEXT_KEY, "left_semi"
         ).select("rep_id")
         touched_cc = cc.join(F.broadcast(touched_ids), "rep_id", "left_semi")
         touched = (

@@ -53,15 +53,12 @@ def minhash_signature(
 _CHUNK_ROWS = 512
 
 
-def minhash_many(
-    texts: list[str], k: int, a: np.ndarray, b: np.ndarray, perm_chunk: int = 32
-) -> np.ndarray:
+def minhash_many(texts: list[str], k: int, a: np.ndarray, b: np.ndarray) -> np.ndarray:
     """Signatures for a batch of texts, shape (n_texts, num_perms) uint64.
 
     Per-doc numpy inner loop with one reused scratch buffer; work per doc is
     |shingles| * num_perms fused multiply-add-min passes.
     """
-    del perm_chunk  # superseded by buffer reuse; kept for config compat
     num_perms = a.shape[0]
     sets = [shingle_hashes(t if t is not None else "", k) for t in texts]
     n = len(sets)

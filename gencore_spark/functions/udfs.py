@@ -15,9 +15,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import DedupConfig
-from .minhash import band_hashes, minhash_many, perm_params, signatures_many
-from .simhash import hamming64, simhash_many
-from .textnorm import extract_text, normalize_for_shingling
+from .minhash import perm_params, signatures_many
+from .textnorm import extract_text
 
 
 def extract_text_udf():
@@ -28,39 +27,6 @@ def extract_text_udf():
         return html.map(lambda b: extract_text(b) if b is not None else "")
 
     return _extract
-
-
-def normalize_udf():
-    """text → shingling-normalized text (lossy; never replaces ``text``)."""
-
-    @F.pandas_udf(T.StringType())
-    def _norm(text: pd.Series) -> pd.Series:
-        return text.map(normalize_for_shingling)
-
-    return _norm
-
-
-def minhash_udf(cfg: DedupConfig):
-    """normalized text → MinHash signature array<long> (uint64 bit pattern)."""
-    a, b = perm_params(cfg.num_perms, cfg.seed)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _minhash(text: pd.Series) -> pd.Series:
-        sigs = minhash_many(text.tolist(), cfg.shingle_k, a, b, cfg.perm_chunk)
-        as_i64 = sigs.view(np.int64)
-        return pd.Series(list(as_i64))
-
-    return _minhash
-
-
-def simhash_udf(cfg: DedupConfig):
-    """normalized text → 64-bit SimHash as long (uint64 bit pattern)."""
-
-    @F.pandas_udf(T.LongType())
-    def _simhash(text: pd.Series) -> pd.Series:
-        return pd.Series(simhash_many(text.tolist(), cfg.shingle_k).view(np.int64))
-
-    return _simhash
 
 
 def signatures_udf(cfg: DedupConfig):
@@ -84,27 +50,3 @@ def signatures_udf(cfg: DedupConfig):
         )
 
     return _sig
-
-
-def band_hash_udf(cfg: DedupConfig):
-    """signature array<long> → array<long> of ``cfg.bands`` band keys."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _bands(sig: pd.Series) -> pd.Series:
-        mat = np.asarray(sig.tolist(), dtype=np.int64).view(np.uint64)
-        bh = band_hashes(mat, cfg.bands, cfg.rows_per_band).view(np.int64)
-        return pd.Series(list(bh))
-
-    return _bands
-
-
-def simhash_hamming_udf():
-    """(long, long) → hamming distance int (popcount of xor)."""
-
-    @F.pandas_udf(T.IntegerType())
-    def _ham(a: pd.Series, b: pd.Series) -> pd.Series:
-        av = a.to_numpy(dtype=np.int64).view(np.uint64)
-        bv = b.to_numpy(dtype=np.int64).view(np.uint64)
-        return pd.Series(hamming64(av, bv).astype(np.int32))
-
-    return _ham

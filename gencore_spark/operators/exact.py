@@ -95,13 +95,12 @@ def with_text_hash(docs: DataFrame) -> DataFrame:
 
 def distinct_text_reps(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     """One representative row per distinct text: (text_hash, text_hash2,
-    rep_id, norm_text, n_members).  rep_id = min doc_id in the exact group
+    rep_id, text, norm_text).  rep_id = min doc_id in the exact group
     (deterministic)."""
     return (
         docs.groupBy("text_hash", "text_hash2")
         .agg(
             F.min("doc_id").alias("rep_id"),
-            F.count(F.lit(1)).alias("n_members"),
             F.first("text").alias("text"),  # identical within group by key def
         )
         .withColumn("norm_text", normalize_expr(F.col("text")))

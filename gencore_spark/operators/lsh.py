@@ -36,9 +36,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..config import DedupConfig
 
 
-def band_explode(
-    signed: DataFrame, cfg: DedupConfig, passthrough: tuple[str, ...] = ()
-) -> DataFrame:
+def band_explode(signed: DataFrame, cfg: DedupConfig) -> DataFrame:
     """(rep_id, minhash) → one row per (rep_id, band_id, band_hash).
 
     Pure JVM: band key = ``xxhash64(band_id, slice(minhash, band))`` —
@@ -46,10 +44,6 @@ def band_explode(
     (The numpy ``band_hashes`` kernel remains as the tested reference
     implementation of band mixing; the pipeline key only needs to be a
     deterministic injective-ish mix, not that exact one.)
-
-    ``passthrough`` — extra columns carried through the explode unchanged
-    (used by the streaming near-dup gate to keep url/event-time on the
-    band rows; the batch path leaves it empty so the shuffle stays thin).
     """
     r = cfg.rows_per_band
     bands_expr = F.array(
@@ -63,9 +57,9 @@ def band_explode(
             for i in range(cfg.bands)
         ]
     )
-    return signed.select(
-        "rep_id", *passthrough, F.explode(bands_expr).alias("b")
-    ).select("rep_id", *passthrough, "b.band_id", "b.band_hash")
+    return signed.select("rep_id", F.explode(bands_expr).alias("b")).select(
+        "rep_id", "b.band_id", "b.band_hash"
+    )
 
 
 def bucketed_pairs(
@@ -88,8 +82,9 @@ def bucketed_pairs(
       edges and stats are materialized — a long-lived session running many
       dedup queries would otherwise accumulate executor storage.
 
-    Shared by the MinHash band join, the SimHash pigeonhole join, and the
-    embedding sign-LSH join — one skew policy, tested once.
+    Shared by the batch's band join (:func:`candidate_pairs`) and the
+    merge's touched-bucket join (``delta.py``) — one skew policy, tested
+    once.
     """
     from pyspark.sql import Window
 

@@ -6,8 +6,10 @@ the duplication histogram (``stats.cpp:123-133``) and the JSON report
 
 Counters are computed as one aggregation per stage DataFrame (triggered by
 the pipeline at checkpoint boundaries — no extra passes over data that is
-being materialized anyway) and per-partition row counts via
-``spark_partition_id()`` groupBy — the lineage trail the north_star asks for.
+being materialized anyway); the per-partition row counts and the cluster
+size histogram come from one ``spark_partition_id()`` groupBy
+(:func:`partition_and_size_stats`) — the lineage trail the north_star asks
+for.
 """
 
 from __future__ import annotations
@@ -20,38 +22,15 @@ from typing import Any
 from pyspark.sql import DataFrame, functions as F
 
 
-def partition_lineage(df: DataFrame, max_partitions: int = 512) -> list[dict]:
-    """[{partition, rows}] — row distribution across partitions (skew lens)."""
-    rows = (
-        df.groupBy(F.spark_partition_id().alias("partition"))
-        .agg(F.count(F.lit(1)).alias("rows"))
-        .orderBy("partition")
-        .limit(max_partitions)
-        .collect()
-    )
-    return [{"partition": r["partition"], "rows": r["rows"]} for r in rows]
-
-
-def cluster_size_histogram(canonical: DataFrame, cap: int = 100) -> list[dict]:
-    """Duplication histogram, capped like the reference (``stats.h:15``)."""
-    rows = (
-        canonical.select(F.least(F.col("fr"), F.lit(cap)).alias("size"))
-        .groupBy("size")
-        .agg(F.count(F.lit(1)).alias("clusters"))
-        .orderBy("size")
-        .collect()
-    )
-    return [{"size": r["size"], "clusters": r["clusters"]} for r in rows]
-
-
 def partition_and_size_stats(
     canonical: DataFrame, cap: int = 100, max_partitions: int = 512
 ) -> tuple[list[dict], list[dict]]:
-    """(partition_lineage, cluster_size_histogram) from ONE Spark job.
+    """(partition lineage, cluster size histogram) from ONE Spark job.
 
     One groupBy over (partition_id, capped fr) — bounded at
-    max_partitions × cap rows — then both views are derived driver-side.
-    Replaces two separate collect jobs in the pipeline finalizer."""
+    max_partitions × cap rows — then both views are derived driver-side:
+    [{partition, rows}] (the skew lens) and [{size, clusters}] (the
+    duplication histogram, capped like the reference, ``stats.h:15``)."""
     rows = (
         canonical.select(
             F.spark_partition_id().alias("partition"),

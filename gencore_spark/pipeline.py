@@ -66,8 +66,8 @@ from .sources import TableIO
 STAGE_COLUMNS = {
     "s1_docs": ["doc_id", "url", "warc_ts", "text", "lang", "text_hash",
                 "text_hash2", "bypass"],
-    "s2_reps": ["text_hash", "text_hash2", "rep_id", "n_members", "norm_text",
-                "minhash", "simhash"],
+    "s2_reps": ["text_hash", "text_hash2", "rep_id", "norm_text", "minhash",
+                "simhash"],
     "s3_edges": ["id_a", "id_b", "jaccard", "cont_a", "cont_b", "sim_hamming"],
     "s4_cc": ["rep_id", "cluster_id"],
     "s5_canonical": ["doc_id", "url", "warc_ts", "text", "lang", "cluster_id",

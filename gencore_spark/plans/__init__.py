@@ -1,7 +1,6 @@
 from .inspect import (
     arrow_eval_count,
     explain_str,
-    has_broadcast_join,
     scan_read_columns,
 )
 from .metrics_api import driver_stage_metrics
@@ -10,6 +9,5 @@ __all__ = [
     "arrow_eval_count",
     "driver_stage_metrics",
     "explain_str",
-    "has_broadcast_join",
     "scan_read_columns",
 ]

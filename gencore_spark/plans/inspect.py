@@ -52,7 +52,3 @@ def arrow_eval_count(df: DataFrame) -> int:
     if ids:
         return len(ids)
     return len(re.findall(_PY_NODES, plan))
-
-
-def has_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in explain_str(df) or "BroadcastNestedLoopJoin" in explain_str(df)

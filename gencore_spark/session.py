@@ -87,6 +87,11 @@ def get_spark(
 ) -> SparkSession:
     cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cores}]"
+    # arrow_batch_rows bounds numpy peak memory per pandas-UDF worker
+    # (~8192 rows x ~2 KB text x in+out ≈ 30 MB/batch/worker).  Raised from
+    # 2048 in round 6: fewer batch boundaries = fewer Arrow flushes and
+    # better shingle-memo locality (verify stage 7.9s -> 5.8s at 368k
+    # pairs from the batch size alone, A/B'd at 60k pages).
     # Default 1 task per slot suits the benchmarked small-per-core volumes
     # (60k pages / 32 cores: 2-3x partitions measured slightly worse, AQE
     # already coalesces).  At >=75k pages/core raise to 2x cores: the 600k/

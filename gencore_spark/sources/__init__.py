@@ -1,3 +1,3 @@
-from .tables import TableIO, load_testdata
+from .tables import TableIO
 
-__all__ = ["TableIO", "load_testdata"]
+__all__ = ["TableIO"]

@@ -56,8 +56,3 @@ class TableIO:
             return self.spark.read.table(f"gencore.{name}")
         reader = self.spark.read if schema is None else self.spark.read.schema(schema)
         return reader.parquet(self._path(name))
-
-
-def load_testdata(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one driver-generated testdata table (TESTDATA.md)."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))

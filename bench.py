@@ -19,8 +19,8 @@ auditable from the artifact alone.
 
 Per-query timings for the ``BENCH_QUERIES`` rows of
 ``__spark_entry__.queries()`` run once (they are short and JVM-bound) at
-``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1); a listed row
-missing from ``queries()`` is reported as failed.
+``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1).
+A listed row missing from ``queries()`` is reported as failed.
 
 Scaling-efficiency evidence (N vs 4N cores) is produced by
 ``tools/scaling_bench.py`` → ``BENCH/BASELINE.md``.

@@ -1,6 +1,7 @@
 """Plan shape and shared pieces of the dedup path: column pruning, the
 JVM-only bucketing and gating stages, verify's payload attach, LSH
-bucketing under the mega-bucket cap, and the driver's stage-metrics read."""
+bucketing under the mega-bucket cap, and the stage-metrics read from the
+Spark UI's REST API."""
 
 import pytest
 from pyspark.sql import functions as F

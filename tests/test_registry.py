@@ -1,4 +1,4 @@
-"""The driver registry is consistent without running Spark: every query has
+"""The query registry is consistent without running Spark: every query has
 an oracle twin, and OPERATORS.md indexes exactly the registered rows."""
 
 from __future__ import annotations

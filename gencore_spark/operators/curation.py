@@ -24,16 +24,13 @@ order a pretraining corpus actually needs:
 8. **token-budget shard packing** — train split only (the unit a trainer
    streams); val/test stay unsharded (``shard_id`` NULL).
 
-Near-duplicate clustering (MinHash/SimHash, `dedup_variants.py`) slots in
-between 2 and 3 via ``near_dup=True``, and containment (truncation)
-collapse (`containment.py::containment_dedup` — the near-subset case
-whose Jaccard is far below any near-dup threshold) after it via
-``containment=True``; both are off by default here because the
-composition below is exactly SQL-expressible end to end, which is what
-makes ``corpus_curation_e2e`` a checkable oracle row rather than a
-rows-only smoke test (the near-dup path has its own fixture-scale oracle
-row, ``curation_near_dup_fixture``; the containment stage reuses the
-oracle-green ``containment_dedup`` engine and is pinned by pytest).
+Near-duplicate clustering (the dedup engine's MinHash/LSH/verify/CC
+stages, :func:`_near_dup_losers`) slots in between 2 and 3 via
+``near_dup=True``, and containment (truncation) collapse
+(`containment.py::containment_dedup` — the near-subset case whose Jaccard
+is far below any near-dup threshold) after it via ``containment=True``;
+both are off by default here because the composition below is exactly
+SQL-expressible end to end.  Both optional stages are pinned by pytest.
 
 Scale shape (the part that must survive 1000 executors × 100 TB):
 
@@ -53,12 +50,46 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..config import DEFAULT_CONFIG
+from .components import connected_components
 from .decontam import decontaminate
-from .exact import _H2_SEED
+from .exact import _H2_SEED, normalize_expr, with_signatures
 from .lines import line_dedup
+from .lsh import candidate_pairs
 from .packing import hash_split, pack_into_token_shards, stratified_sample
 from .textstats import quality_expr, token_count
 from .urldedup import url_dedup
+from .verify import verify_pairs
+
+
+def _near_dup_losers(d: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id_col) of every near-dup cluster member but the min-id one.
+
+    ``d`` holds distinct texts (the exact collapse ran first), so each
+    document is its own text rep and the dedup engine's stages run on it
+    directly: signatures → LSH band join → verify → connected components.
+    """
+    cfg = DEFAULT_CONFIG
+    # signed feeds the band join and both verify joins: persist so the
+    # signature UDF runs once per doc; connected_components fetches (or
+    # pins) its input, so the caches can go once it returns
+    signed = with_signatures(
+        d.select(
+            F.col(id_col).alias("rep_id"),
+            normalize_expr(F.col(text_col)).alias("norm_text"),
+        ),
+        cfg,
+    ).persist()
+    edges, stats = candidate_pairs(signed.select("rep_id", "minhash"), cfg)
+    try:
+        verified = verify_pairs(edges, signed, cfg, n_payload_rows=signed.count())
+        cc = connected_components(verified.select("id_a", "id_b"), cfg)
+    finally:
+        stats.unpersist()
+        signed.unpersist()
+    return cc.filter(F.col("rep_id") != F.col("cluster_id")).select(
+        F.col("rep_id").alias(id_col)
+    )
 
 
 def curate_corpus(
@@ -152,23 +183,9 @@ def curate_corpus(
 
     # -- 2b. optional near-dup collapse (MinHash/LSH/verify/CC engine):
     # keep the min-id member of every near-dup cluster.  Off by default so
-    # the composition stays exactly SQL-oracle-expressible; when on, the
-    # engine's own oracle'd stack (dedup_variants.minhash_lsh_clusters)
-    # does the clustering and this stage is covered by pytest instead.
+    # the composition stays exactly SQL-expressible.
     if near_dup:
-        from .dedup_variants import minhash_lsh_clusters
-
-        assign = minhash_lsh_clusters(
-            d.select(
-                F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-            )
-        )
-        winners = (
-            assign.groupBy("cluster_id")
-            .agg(F.min("doc_id").alias(id_col))
-            .select(id_col)
-        )
-        d = d.join(winners, id_col, "left_semi")
+        d = d.join(_near_dup_losers(d, id_col, text_col), id_col, "left_anti")
         if track:
             attrition["after_near_dup"] = d.count()
 

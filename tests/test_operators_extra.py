@@ -1,7 +1,6 @@
-"""Tests for training-data operators: textstats, ANN, dedup variants,
-multimodal plumbing."""
+"""Tests for training-data operators (textstats) and the LSH band join's
+skew policy."""
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -9,11 +8,6 @@ from pyspark.sql import functions as F
 @pytest.fixture(scope="module")
 def docs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet").cache()
-
-
-@pytest.fixture(scope="module")
-def emb(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet").cache()
 
 
 # ----------------------------------------------------------------- textstats
@@ -79,163 +73,29 @@ def test_fingerprint_deterministic(spark, docs):
     assert a.filter(F.col("fp") == 0).count() == 0
 
 
-# ----------------------------------------------------------------------- ann
+# ------------------------------------------------------- LSH skew policy
 
 
-def test_cosine_topk_exact_against_numpy(spark, emb):
-    from gencore_spark.operators.ann import cosine_topk
-
-    out = cosine_topk(
-        emb.filter(F.col("vec_id") >= 10), emb.filter(F.col("vec_id") < 10), k=3
-    ).collect()
-    # numpy oracle
-    pdf = emb.toPandas().set_index("vec_id")
-    mat = np.asarray(pdf["embedding"].tolist(), dtype=np.float64)
-    ids = pdf.index.to_numpy()
-    norm = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    qmask, cmask = ids < 10, ids >= 10
-    sims = norm[cmask] @ norm[qmask].T
-    for qi, qid in enumerate(ids[qmask]):
-        order = np.lexsort((ids[cmask], -sims[:, qi]))[:3]
-        expect = list(ids[cmask][order])
-        got = [r["neighbor_id"] for r in sorted(
-            (r for r in out if r["query_id"] == qid), key=lambda r: r["rank"]
-        )]
-        assert got == expect, f"query {qid}"
-
-
-def test_lsh_topk_subset_of_exact_ranking(spark, emb):
-    from gencore_spark.operators.ann import lsh_cosine_topk
-
-    out = lsh_cosine_topk(
-        emb.filter(F.col("vec_id") >= 10),
-        emb.filter(F.col("vec_id") < 10),
-        dim=64, k=3,
-    )
-    rows = out.collect()
-    assert all(1 <= r["rank"] <= 3 for r in rows)
-    # per query at most k rows
-    from collections import Counter
-
-    c = Counter(r["query_id"] for r in rows)
-    assert all(v <= 3 for v in c.values())
-
-
-# ------------------------------------------------------------ dedup variants
-
-
-@pytest.fixture(scope="module")
-def dup_docs(spark, docs):
-    c1 = docs.select(
-        (F.col("doc_id") + 10_000_000).alias("doc_id"), "text", "lang", "source", "n_chars"
-    )
-    return docs.select("doc_id", "text", "lang", "source", "n_chars").unionByName(c1).cache()
-
-
-def test_exact_dedup_counts(spark, dup_docs, docs):
-    from gencore_spark.operators.dedup_variants import exact_dedup
-
-    out = exact_dedup(dup_docs)
-    n_texts = docs.select("text").distinct().count()
-    assert out.count() == n_texts
-    assert out.filter(F.col("fr") != 2).count() == 0  # every text doubled
-    # canonical is the min id → always the original, never the +1e7 copy
-    assert out.filter(F.col("canonical_id") >= 10_000_000).count() == 0
-
-
-def test_simhash_clusters_exact_dups_merge(spark, dup_docs):
-    from gencore_spark.operators.dedup_variants import simhash_clusters
-
-    out = simhash_clusters(dup_docs, max_hamming=3)
-    # identical texts → identical simhash → same cluster, always
-    sizes = out.groupBy("cluster_id").count()
-    assert sizes.filter("count >= 2").count() > 0
-    pairs = (
-        out.alias("a")
-        .join(out.alias("b"), F.col("a.doc_id") + 10_000_000 == F.col("b.doc_id"))
-        .filter(F.col("a.cluster_id") != F.col("b.cluster_id"))
-    )
-    assert pairs.count() == 0
-
-
-def test_minhash_clusters_cover_all_docs(spark, dup_docs):
-    from gencore_spark.operators.dedup_variants import minhash_lsh_clusters
-
-    out = minhash_lsh_clusters(dup_docs)
-    assert out.count() == dup_docs.count()  # total assignment
-    # exact copies land together
-    bad = (
-        out.alias("a")
-        .join(out.alias("b"), F.col("a.doc_id") + 10_000_000 == F.col("b.doc_id"))
-        .filter(F.col("a.cluster_id") != F.col("b.cluster_id"))
-    )
-    assert bad.count() == 0
-
-
-def test_ngram_jaccard_merges_punctuation_noise(spark):
-    from gencore_spark.operators.dedup_variants import ngram_jaccard_clusters
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 8
-    noisy = base.upper()  # token n-grams are case-folded → jaccard 1.0
-    df = spark.createDataFrame(
-        [(1, base), (2, noisy), (3, "totally different words entirely " * 12)],
-        "doc_id long, text string",
-    )
-    out = {r["doc_id"]: r["cluster_id"] for r in ngram_jaccard_clusters(df).collect()}
-    assert out[1] == out[2]
-    assert out[3] != out[1]
-
-
-def test_embedding_cosine_clusters_duplicate_vectors(spark, emb):
-    from gencore_spark.operators.dedup_variants import embedding_cosine_clusters
-
-    dup = emb.unionByName(
-        emb.filter(F.col("vec_id") < 50).select(
-            (F.col("vec_id") + 100_000).alias("vec_id"), "embedding", "label"
-        )
-    )
-    out = embedding_cosine_clusters(dup, tau=0.999)
-    bad = (
-        out.alias("a")
-        .join(out.alias("b"), F.col("a.vec_id") + 100_000 == F.col("b.vec_id"))
-        .filter(F.col("a.cluster_id") != F.col("b.cluster_id"))
-    )
-    assert bad.count() == 0
-    assert out.count() == dup.count()
-
-
-def _clustered_vectors(n_groups=20, per_group=4, dim=64, seed=7, spread=0.25):
-    """Groups of noisy copies around base vectors: within-group cosine
-    lands in ~[0.9, 0.99] (NOT 1.0), across-group near 0."""
-    rng = np.random.default_rng(seed)
-    base = rng.standard_normal((n_groups, dim))
-    base /= np.linalg.norm(base, axis=1, keepdims=True)
-    rows = []
-    vid = 0
-    for g in range(n_groups):
-        for _ in range(per_group):
-            noise = rng.standard_normal(dim) * spread / np.sqrt(dim)
-            v = base[g] + noise
-            rows.append((vid, g, [float(x) for x in v]))
-            vid += 1
-    return rows
-
-
-def test_heterogeneous_mega_bucket_keeps_recall(spark):
+def test_heterogeneous_mega_bucket_keeps_recall(spark, tmp_path):
     """Two planted near-dup groups sharing heavy boilerplate collide in the
     same (capped) LSH buckets; every bucket exceeds the cap.  Anchor-star
-    alone would orphan the higher-id group (its edges to the other group's
-    anchor fail verification) — the chain edges must keep BOTH groups
-    internally connected, and verification must keep them separate."""
+    alone would orphan the group whose members sort after the other
+    group's anchor (its edges to that anchor fail verification) — the
+    chain edges must keep BOTH groups internally connected, and
+    verification must keep them separate.  Runs ``dedup_pages`` end to
+    end and reads each page's cluster back from the stage snapshots."""
+    import datetime
+
     import numpy as np
 
+    from gencore_spark import dedup_pages
     from gencore_spark.config import DedupConfig
-    from gencore_spark.operators.dedup_variants import minhash_lsh_clusters
 
     rng = np.random.default_rng(3)
     vocab = [f"w{i:04d}" for i in range(2000)]
     boiler = " ".join(rng.choice(vocab, 110))
     bases = [" ".join(rng.choice(vocab, 45)) for _ in range(2)]
+    ts = datetime.datetime(2024, 1, 1)
     rows = []
     for g, base_id in ((0, 0), (1, 1000)):
         toks = (boiler + " " + bases[g]).split()
@@ -243,118 +103,30 @@ def test_heterogeneous_mega_bucket_keeps_recall(spark):
             t = list(toks)
             for _ in range(2):  # ~2 token edits per member
                 t[int(rng.integers(0, len(t)))] = str(rng.choice(vocab))
-            rows.append((base_id + m, " ".join(t)))
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    cfg = DedupConfig(bucket_size_cap=8)
-    out = {r["doc_id"]: r["cluster_id"]
-           for r in minhash_lsh_clusters(df, cfg).collect()}
-    a = [out[i] for i in range(30)]
-    b = [out[1000 + i] for i in range(30)]
+            text = " ".join(t)
+            rows.append((f"https://g.org/{base_id + m}", ts, None, text, "en"))
+    pages = spark.createDataFrame(
+        rows, "url string, warc_ts timestamp, html binary, text string, lang string"
+    )
+    workdir = str(tmp_path / "work")
+    dedup_pages(spark, pages, workdir, DedupConfig(bucket_size_cap=8))
+    docs = spark.read.parquet(f"{workdir}/s1_docs")
+    reps = spark.read.parquet(f"{workdir}/s2_reps")
+    cc = spark.read.parquet(f"{workdir}/s4_cc")
+    out = {
+        r["url"]: r["c"]
+        for r in docs.join(reps, ["text_hash", "text_hash2"])
+        .join(cc, "rep_id", "left")
+        .select("url", F.coalesce("cluster_id", "rep_id").alias("c"))
+        .collect()
+    }
+    a = [out[f"https://g.org/{i}"] for i in range(30)]
+    b = [out[f"https://g.org/{1000 + i}"] for i in range(30)]
     # within-group pair recall >= 0.99 → each group is one component
     assert len(set(a)) == 1, f"group A split into {len(set(a))} clusters"
     assert len(set(b)) == 1, f"group B split into {len(set(b))} clusters"
     # and the groups did NOT merge (verification separates them)
     assert set(a) != set(b)
-
-
-def test_embedding_cosine_clusters_recall_at_tau09(spark):
-    """Pair recall >= 0.95 vs brute-force cosine at tau=0.9 on
-    NON-identical near-dup vectors (the banded-LSH recall guarantee)."""
-    from gencore_spark.operators.dedup_variants import embedding_cosine_clusters
-
-    rows = _clustered_vectors()
-    df = spark.createDataFrame(
-        [(i, v) for i, _, v in rows], "vec_id long, embedding array<float>"
-    )
-    # numpy truth: all pairs with cosine >= 0.9
-    mat = np.asarray([v for _, _, v in rows], dtype=np.float64)
-    norm = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    sims = norm @ norm.T
-    iu = np.triu_indices(len(rows), k=1)
-    truth = set(zip(iu[0][sims[iu] >= 0.9].tolist(), iu[1][sims[iu] >= 0.9].tolist()))
-    assert len(truth) >= 50  # the fixture really has non-trivial structure
-
-    out = {r["vec_id"]: r["cluster_id"]
-           for r in embedding_cosine_clusters(df, tau=0.9).collect()}
-    hit = sum(1 for a, b in truth if out[a] == out[b])
-    assert hit / len(truth) >= 0.95
-
-
-def test_ann_lsh_topk_recall_vs_brute_force(spark):
-    """recall@5 >= 0.9 of the LSH path against exact cosine top-k on
-    clustered (non-orthogonal) vectors."""
-    from gencore_spark.operators.ann import cosine_topk, lsh_cosine_topk
-
-    rows = _clustered_vectors(n_groups=15, per_group=6, seed=11)
-    df = spark.createDataFrame(
-        [(i, v) for i, _, v in rows], "vec_id long, embedding array<float>"
-    )
-    # one query per group; its 5 groupmates (cos >= 0.9) stay in the corpus
-    corpus = df.filter(F.col("vec_id") % 6 != 0)
-    queries = df.filter(F.col("vec_id") % 6 == 0)
-    exact = cosine_topk(corpus, queries, k=5).collect()
-    approx = lsh_cosine_topk(corpus, queries, dim=64, k=5).collect()
-    truth = {(r["query_id"], r["neighbor_id"]) for r in exact}
-    got = {(r["query_id"], r["neighbor_id"]) for r in approx}
-    assert len(truth & got) / len(truth) >= 0.9
-
-
-def test_ann_ivf_topk_recall_vs_brute_force(spark):
-    """recall@5 >= 0.9 of the IVF path (KMeans coarse quantizer + n_probe
-    cells) against exact cosine top-k on the same clustered vectors."""
-    from gencore_spark.operators.ann import cosine_topk, ivf_cosine_topk
-
-    rows = _clustered_vectors(n_groups=15, per_group=6, seed=11)
-    df = spark.createDataFrame(
-        [(i, v) for i, _, v in rows], "vec_id long, embedding array<float>"
-    )
-    corpus = df.filter(F.col("vec_id") % 6 != 0)
-    queries = df.filter(F.col("vec_id") % 6 == 0)
-    exact = cosine_topk(corpus, queries, k=5).collect()
-    approx = ivf_cosine_topk(corpus, queries, k=5, n_cells=8, n_probe=3).collect()
-    truth = {(r["query_id"], r["neighbor_id"]) for r in exact}
-    got = {(r["query_id"], r["neighbor_id"]) for r in approx}
-    assert len(truth & got) / len(truth) >= 0.9
-    # every query produced a full result set from its probed cells
-    by_q = {}
-    for r in approx:
-        by_q.setdefault(r["query_id"], []).append(r["rank"])
-    assert all(sorted(v) == list(range(1, 6)) for v in by_q.values())
-
-
-# ------------------------------------------------------------- multimodal
-
-
-def test_multimodal_feature_plumbing(spark, docs):
-    from gencore_spark.operators.multimodal import FEATURE_SCHEMA, extract_features
-
-    d = docs.select("doc_id", F.encode("text", "utf-8").alias("payload")).limit(100)
-    out = extract_features(d)
-    assert out.count() == 100
-    row = out.first()
-    assert row["modality"] == "image"
-    assert len(row["feature"]) == 8
-    assert row["n_bytes"] > 0
-    # deterministic across runs
-    a = out.select("doc_id", "width", "height").collect()
-    b = extract_features(d).select("doc_id", "width", "height").collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-
-
-def test_multimodal_real_decoder_raises(spark, docs):
-    from gencore_spark.operators.multimodal import extract_features
-
-    with pytest.raises(NotImplementedError):
-        extract_features(docs.limit(1), decode_stub=False)
-
-
-def test_frame_sample_plan(spark):
-    from gencore_spark.operators.multimodal import frame_sample_plan
-
-    df = spark.range(10).select(F.col("id").alias("doc_id"))
-    out = frame_sample_plan(df, every_n=30)
-    assert out.count() >= 10  # at least frame 0 per doc
-    assert out.filter(F.col("frame_index") % 30 != 0).count() == 0
 
 
 def test_mega_bucket_chain_is_salted_and_bounded(spark):
@@ -402,148 +174,6 @@ def test_bucketed_pairs_never_self_pairs(spark):
     got = sorted(map(tuple, edges.collect()))
     stats.unpersist()
     assert got == [(1, 2)]
-
-
-def test_variants_release_caches(spark, monkeypatch):
-    """Explicit persists inside the dedup variants are released before the
-    variant returns (VERDICT r2 'unpersist discipline'): repeated calls in
-    one session must not accumulate cached RDD blocks."""
-    import gc
-    import time
-
-    from pyspark.sql import functions as F
-
-    from gencore_spark.operators import components
-    from gencore_spark.operators.dedup_variants import (
-        exact_dedup,
-        minhash_lsh_clusters,
-        simhash_clusters,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"document body number {i % 7} with shared words " * 3)
-         for i in range(60)],
-        "doc_id long, text string",
-    )
-
-    def counts() -> tuple[int, int]:
-        # (explicit persists, CC's localCheckpoint pins), counted apart:
-        # ``unpersist()`` drops an explicit persist at once, and CC drops
-        # its superseded pins itself, but the pin its result reads goes
-        # only when the ContextCleaner reaps it after a JVM GC, and Spark
-        # can keep that pin of the last call or two reachable while the
-        # session idles
-        rdds = spark.sparkContext._jsc.getPersistentRDDs()
-        pins = sum(
-            rdds.get(k).rdd().isLocallyCheckpointed()
-            for k in rdds.keySet().toArray()
-        )
-        return rdds.size() - pins, pins
-
-    def settle(done) -> tuple[int, int]:
-        # force both GCs, then poll until ``done(counts, previous counts)``
-        # (other session-scoped tests legitimately hold .cache()d
-        # fixtures, so the floor is not 0)
-        gc.collect()
-        prev = cur = None
-        for _ in range(30):
-            spark.sparkContext._jvm.System.gc()
-            time.sleep(0.3)
-            cur = counts()
-            if done(cur, prev):
-                break
-            prev = cur
-        return cur
-
-    # bound 0: CC takes the star rounds, whose pins this test counts
-    monkeypatch.setattr(components, "_DRIVER_MAX_EDGES", 0)
-
-    def one_round():
-        for fn in (minhash_lsh_clusters, simhash_clusters):
-            fn(docs).count()
-
-    # ``base`` is read before the first call, so a persist that one call
-    # leaves behind (identical plans re-use one cache entry) also fails
-    base, _ = settle(lambda cur, prev: cur == prev)
-    one_round()
-    _, pins_1 = settle(lambda cur, prev: cur == prev)
-    one_round()
-    one_round()
-    # a call leaves one pin behind, so at most the last two calls' pins
-    # can still be reachable after a round -- a bound that does not grow
-    # with the rounds, while a pile-up adds one pin or more per call (4+
-    # over rounds 2-3)
-    pin_slack = 2
-    # wait for the bounds themselves, not for two equal readings: a real
-    # leak never drops below them and still fails after the 30 tries
-    after, pins_3 = settle(
-        lambda cur, _prev: cur[0] <= base + 2 and cur[1] <= pins_1 + pin_slack
-    )
-    # the explicit persists (2 per variant call = 12 across the rounds)
-    # must not pile up; slack of 2 covers one in-flight ContextCleaner batch
-    assert after <= base + 2, f"cached RDDs grew {base} -> {after}"
-    assert pins_3 <= pins_1 + pin_slack, (
-        f"CC localCheckpoint pins grew {pins_1} -> {pins_3} over two rounds"
-    )
-
-
-def test_variant_fanout_prunes_signature_udf(spark):
-    """After unpersist, the lazy fan-out's re-read of the rep frame must
-    column-prune the signature UDF away (it only needs th1/th2/rep_id) —
-    otherwise every downstream action re-runs MinHash over all reps."""
-    from pyspark.sql import functions as F
-
-    from gencore_spark.operators.dedup_variants import minhash_lsh_clusters
-    from gencore_spark.plans.inspect import arrow_eval_count
-
-    docs = spark.createDataFrame(
-        [(i, f"some page text body variant {i % 5} padding words here")
-         for i in range(40)],
-        "doc_id long, text string",
-    )
-    out = minhash_lsh_clusters(docs)
-    # cc is already materialized inside; the remaining plan is mapping +
-    # slim rep projection + checkpointed cc — no Python eval nodes
-    assert arrow_eval_count(out) == 0
-
-
-def test_ivf_build_probe_split(spark, tmp_path):
-    """The scale contract for IVF: build once (KMeans fit + cell assign),
-    probe many — a storage-backed probe plan is a pruned scan of the
-    cell-partitioned parquet with NO quantizer anywhere, and results are
-    identical to the convenience wrapper at the same seed."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from gencore_spark.operators.ann import (
-        ivf_build,
-        ivf_cosine_topk,
-        ivf_load,
-        ivf_probe,
-    )
-    from gencore_spark.plans.inspect import explain_str
-
-    rng = np.random.default_rng(7)
-    vecs = rng.standard_normal((200, 16))
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<double>",
-    )
-    corpus = df.filter(F.col("vec_id") >= 10)
-    queries = df.filter(F.col("vec_id") < 10)
-
-    path = str(tmp_path / "ivf")
-    ivf_build(corpus, n_cells=8, storage_path=path)
-    index = ivf_load(spark, path)
-    probed = ivf_probe(index, queries, k=5, n_probe=3)
-    plan = explain_str(probed)
-    assert "KMeans" not in plan and "kmeans" not in plan
-    assert "PartitionFilters" in plan or "cells" in plan  # pruned parquet scan
-
-    wrapper = ivf_cosine_topk(corpus, queries, k=5, n_cells=8, n_probe=3)
-    assert sorted(map(tuple, probed.collect())) == sorted(
-        map(tuple, wrapper.collect())
-    )
 
 
 def test_repetition_signals_constructed(spark):

@@ -1,7 +1,5 @@
-"""Plan shape and shared pieces of the dedup path: column pruning, the
-JVM-only bucketing and gating stages, verify's payload attach, LSH
-bucketing under the mega-bucket cap, and the stage-metrics read from the
-Spark UI's REST API."""
+"""Plan-shape assertions (scale contract) for the dedup path, and the
+stage-metrics read from the Spark UI's REST API."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -146,106 +144,6 @@ def test_filter_pushdown_reaches_scan(spark, pages_parquet):
     pages = spark.read.parquet(pages_parquet).filter(F.col("lang") == "en").select("url")
     plan = explain_str(pages)
     assert "PushedFilters" in plan and "lang" in plan.split("PushedFilters")[1][:200]
-
-
-def test_mega_bucket_chain_is_salted_and_bounded(spark):
-    """A single 50k-member bucket (cap 64) must NOT sort in one window
-    task: the chain is salted into ~cap-sized sub-groups (one small sort
-    each), evidenced by (a) the chain window partitioning on chain_salt in
-    the plan and (b) the chain contributing ~n - ceil(n/cap) edges (one
-    unsalted chain would contribute n-1)."""
-    from pyspark.sql import functions as F
-
-    from gencore_spark.operators.lsh import bucketed_pairs
-    from gencore_spark.plans.inspect import explain_str
-
-    n, cap = 50_000, 64
-    exploded = spark.range(n).select(
-        F.lit(0).alias("b"), F.col("id").alias("rep_id")
-    )
-    edges, stats = bucketed_pairs(exploded, ["b"], cap)
-    plan = explain_str(edges)
-    assert "chain_salt" in plan, "chain window no longer salted"
-    total = edges.count()
-    srow = stats.collect()[0]
-    stats.unpersist()
-    assert srow["bucket_size"] == n and bool(srow["capped"])
-    # star = n-1 edges; salted chain = n - (#non-empty sub-groups);
-    # overlap between the two sets is at most a few edges
-    n_sub = -(-n // cap)  # 782
-    non_anchor = edges.filter((F.col("id_a") != 0) & (F.col("id_b") != 0)).count()
-    assert n - n_sub - 5 <= non_anchor <= n - n_sub + 5, (
-        f"chain edge count {non_anchor} suggests "
-        f"{'one unsalted chain' if non_anchor > n - 100 else 'broken chains'}"
-    )
-    assert n - 1 <= total <= 2 * n
-
-
-def test_bucketed_pairs_never_self_pairs(spark):
-    """An id listed twice in one small bucket must not pair with itself:
-    the edges are distinct (id_a < id_b) pairs."""
-    from gencore_spark.operators.lsh import bucketed_pairs
-
-    exploded = spark.createDataFrame(
-        [(1, "b"), (1, "b"), (2, "b")], "rep_id long, b string"
-    )
-    edges, stats = bucketed_pairs(exploded, ["b"], 64)
-    got = sorted(map(tuple, edges.collect()))
-    stats.unpersist()
-    assert got == [(1, 2)]
-
-
-def test_heterogeneous_mega_bucket_keeps_recall(spark, tmp_path):
-    """Two planted near-dup groups sharing heavy boilerplate collide in the
-    same (capped) LSH buckets; every bucket exceeds the cap.  Anchor-star
-    alone would orphan the group whose members sort after the other
-    group's anchor (its edges to that anchor fail verification) — the
-    chain edges must keep BOTH groups internally connected, and
-    verification must keep them separate.  Runs ``dedup_pages`` end to
-    end and reads each page's cluster back from the stage snapshots."""
-    import datetime
-
-    import numpy as np
-
-    from gencore_spark import dedup_pages
-    from gencore_spark.config import DedupConfig
-
-    rng = np.random.default_rng(3)
-    vocab = [f"w{i:04d}" for i in range(2000)]
-    boiler = " ".join(rng.choice(vocab, 110))
-    bases = [" ".join(rng.choice(vocab, 45)) for _ in range(2)]
-    ts = datetime.datetime(2024, 1, 1)
-    rows = []
-    for g, base_id in ((0, 0), (1, 1000)):
-        toks = (boiler + " " + bases[g]).split()
-        for m in range(30):
-            t = list(toks)
-            for _ in range(2):  # ~2 token edits per member
-                t[int(rng.integers(0, len(t)))] = str(rng.choice(vocab))
-            text = " ".join(t)
-            rows.append((f"https://g.org/{base_id + m}", ts, None, text, "en"))
-    pages = spark.createDataFrame(
-        rows, "url string, warc_ts timestamp, html binary, text string, lang string"
-    )
-    workdir = str(tmp_path / "work")
-    dedup_pages(spark, pages, workdir, DedupConfig(bucket_size_cap=8))
-    docs = spark.read.parquet(f"{workdir}/s1_docs")
-    reps = spark.read.parquet(f"{workdir}/s2_reps")
-    cc = spark.read.parquet(f"{workdir}/s4_cc")
-    out = {
-        r["url"]: r["c"]
-        for r in docs.join(reps, ["text_hash", "text_hash2"])
-        .join(cc, "rep_id", "left")
-        .select("url", F.coalesce("cluster_id", "rep_id").alias("c"))
-        .collect()
-    }
-    a = [out[f"https://g.org/{i}"] for i in range(30)]
-    b = [out[f"https://g.org/{1000 + i}"] for i in range(30)]
-    # within-group pair recall >= 0.99 → each group is one component
-    assert len(set(a)) == 1, f"group A split into {len(set(a))} clusters"
-    assert len(set(b)) == 1, f"group B split into {len(set(b))} clusters"
-    # and the groups did NOT merge (verification separates them)
-    assert set(a) != set(b)
 
 
 def test_driver_stage_metrics_disabled_ui_returns_empty(spark):

@@ -61,37 +61,40 @@ written to ``out_dir`` (the old state is never mutated — snapshot-in/
 snapshot-out, the Iceberg model), which is itself a valid state for the
 next delta.
 
-Shared with the batch (``pipeline.py``): the snapshot schema and its
-stale-state check (``STAGE_COLUMNS``, ``read_snapshot``), the s1 builder
-(``build_docs``), the s3 verify and ``s3_buckets`` fold, the s5 member
-build + vote (``vote_clusters``), and ``DedupPipeline._stage``, which
-writes, reads back and counts all five snapshots.  So the merge writes
-the batch's ``REPORT.json`` schema, plus
-``s5_canonical.n_affected_clusters``.  Only merge logic lives here; it
-rebuilds ``out_dir`` on every call (no resume).
+One stage list (:func:`run_stages`) serves both entry points.  The batch
+(``pipeline.dedup_pages``) runs it over an empty old state: typed
+``limit(0)`` frames, so Catalyst's empty-relation propagation removes every
+restriction of the delta against the old state at plan time, and each
+stage plans the batch's corpus-wide work.  Each of s1–s5 has one builder,
+and ``DedupPipeline._stage`` writes, reads back and counts all five
+snapshots, so both entry points write one ``REPORT.json`` schema, with
+``s5_canonical.n_affected_clusters``.  The merge rebuilds ``out_dir`` on
+every call (no resume).
 
-Cost model: each stage computes its delta-sized part ONCE and pins it
+Cost model: each stage computes its delta part ONCE and pins it
 (``localCheckpoint``) — the new docs, the freshly signed reps, the newly
-verified pairs, the CC map and the touched/affected clusters — and later
-steps read those pins instead of re-deriving them from the corpus-sized
-snapshots by anti-joins.  A join of a corpus-sized snapshot with a
-delta-sized set broadcasts the delta side, so the snapshot is scanned,
-not shuffled ("To Partition, or Not to Partition", SIGMOD'21).  Verify's
-payload is the same kind of join: the reps are semi-joined to a broadcast
-of the new pairs' endpoint ids (two per pair, so it grows with the
-fresh-side candidate pairs), and the signature and text attach carry
-O(delta + touched) rows; the recorded s2 row count bounds that payload
-and drives the batch's broadcast-or-fold choice without a count job.  One
-kind of join still builds on a corpus-sized side: the re-delivery and
-seen-text anti-joins (s1, s2).  Signatures, bucketing, verify, CC and the
-vote are O(delta + touched); the delta-sized CC graph runs on the driver
-up to the CC cutover.  Each updated table is written as ``old ∪ delta``:
-under an Iceberg catalog that union is an O(delta) metadata append — the
-new snapshot shares the old data files (``writeTo(...).append()`` on a
-branched table).  The sandbox's directory-of-parquet fallback has no
-shared-file snapshots, so there the union physically rewrites the table —
-O(corpus) sequential I/O per delta, narrow (no shuffle), an artifact of
-the fallback, not the model.
+verified pairs, the CC map — and later steps read those pins instead of
+re-deriving them from the corpus-sized snapshots by anti-joins.  Over an
+empty state the delta part is the stage's snapshot read-back, which the
+batch neither pins nor counts.  A join of a corpus-sized snapshot with a
+small set broadcasts the small side when its rows are within
+``attach_broadcast_max_rows``, the cutover verify's text attach uses.  A
+bound from observed counts decides (the delta parts' rows, observed at
+their stage's write, or a stage's total rows); when the bound is over the
+cutover the merge counts the side, and above the cutover Spark plans the
+join itself, so a side the size of the corpus is never broadcast ("To
+Partition, or Not to Partition", SIGMOD'21).  Verify's payload is the fresh reps plus the old
+reps of the touched buckets.  One kind of join still builds on a
+corpus-sized side: the re-delivery and seen-text anti-joins (s1, s2).
+Signatures, bucketing, verify, CC and the vote are O(delta + touched); the
+delta-sized CC graph runs on the driver up to the CC cutover.  Each
+updated table is written as ``old ∪ delta``: under an Iceberg catalog that
+union is an O(delta) metadata append — the new snapshot shares the old
+data files (``writeTo(...).append()`` on a branched table).  The
+sandbox's directory-of-parquet fallback has no shared-file snapshots, so
+there the union physically rewrites the table — O(corpus) sequential I/O
+per delta, narrow (no shuffle), an artifact of the fallback, not the
+model.
 """
 
 from __future__ import annotations
@@ -100,36 +103,320 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from .config import DEFAULT_CONFIG, DedupConfig
 from .operators.components import connected_components
-from .operators.consensus import size_gate
-from .operators.exact import distinct_text_reps, is_main, with_signatures
+from .operators.consensus import consensus_vote, size_gate
+from .operators.exact import (
+    distinct_text_reps,
+    is_main,
+    route,
+    with_doc_ids,
+    with_signatures,
+    with_text_hash,
+)
 from .operators.lsh import band_explode, bucketed_pairs
 from .operators.verify import rep_containment
-from .pipeline import (
-    STAGE_COLUMNS,
-    DedupPipeline,
-    build_docs,
-    read_snapshot,
-    vote_clusters,
-)
+from .pipeline import STAGE_COLUMNS, STAGE_SCHEMAS, DedupPipeline, read_snapshot
 from .sources import TableIO
 
 _TEXT_KEY = ["text_hash", "text_hash2"]
 _BAND_KEY = ["band_id", "band_hash"]
+# per-doc columns a consensus-vote member carries besides its cluster
+_MEMBER_COLUMNS = ["doc_id", "url", "warc_ts", "text", "lang", "text_hash"]
 
 
-def _either_side_in(pairs: DataFrame, ids: DataFrame) -> DataFrame:
-    """Rows of ``pairs`` (id_a, id_b, ...) with ``id_a`` or ``id_b`` in the
-    small ``ids`` (unique rep_id): two broadcast probes, one pass, no
-    shuffle."""
-    ids = F.broadcast(ids.select("rep_id").withColumn("hit", F.lit(True)))
-    a = ids.select(F.col("rep_id").alias("id_a"), F.col("hit").alias("_ha"))
-    b = ids.select(F.col("rep_id").alias("id_b"), F.col("hit").alias("_hb"))
-    return (
-        pairs.join(a, "id_a", "left")
-        .join(b, "id_b", "left")
-        .filter(F.col("_ha").isNotNull() | F.col("_hb").isNotNull())
-        .select(*pairs.columns)
+def _ensure_text(pages: DataFrame) -> DataFrame:
+    """html-only ingest path: rows arriving without ``text`` get it extracted
+    from ``html`` (the input_hint's byte-identical extractor, as a pandas
+    UDF).  Split-then-union rather than ``coalesce(text, udf(html))``: an
+    ArrowEvalPython node computes its UDF for EVERY row in the batch before
+    the conditional picks, so the naive coalesce would ship every page's
+    html through Python even when text is already present — on a crawl
+    where most rows carry text that is most of the input bytes."""
+    from .functions.udfs import extract_text_udf
+
+    if "text" not in pages.columns:
+        return pages.withColumn("text", extract_text_udf()(F.col("html")))
+    has_text = pages.filter(F.col("text").isNotNull())
+    needs = pages.filter(F.col("text").isNull()).withColumn(
+        "text", extract_text_udf()(F.col("html"))
     )
+    return has_text.unionByName(needs)
+
+
+def build_docs(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """s1: doc ids, bypass routing and the exact text hash of every page."""
+    main, bypass = route(with_doc_ids(_ensure_text(pages)), cfg)
+    main = with_text_hash(main).withColumn("bypass", F.lit(False))
+    bypass = with_text_hash(bypass).withColumn("bypass", F.lit(True))
+    # html is dropped HERE and never read again
+    return main.unionByName(bypass).select(*STAGE_COLUMNS["s1_docs"])
+
+
+def vote_clusters(
+    main_docs: DataFrame, clusters: DataFrame, bypass_docs: DataFrame,
+    cfg: DedupConfig,
+) -> DataFrame:
+    """s5: consensus vote over cluster members, one row per cluster.  Each
+    main doc joins its text's row in ``clusters`` ((text_hash, text_hash2)
+    → (cluster_id, containment)); docs without a row there are not voted.
+    Each bypass doc is a singleton cluster of its own."""
+    main_members = main_docs.join(clusters, ["text_hash", "text_hash2"]).select(
+        *_MEMBER_COLUMNS, "cluster_id", "containment"
+    )
+    bypass_members = bypass_docs.select(
+        *_MEMBER_COLUMNS,
+        F.col("doc_id").alias("cluster_id"),
+        F.lit(None).cast("double").alias("containment"),
+    )
+    return consensus_vote(main_members.unionByName(bypass_members), cfg)
+
+
+def run_stages(
+    pipe: DedupPipeline, pages: DataFrame, old: dict[str, DataFrame] | None,
+    force: bool,
+) -> DataFrame:
+    """The five stage builders: merge ``pages`` into the ``old`` state
+    (stage name → snapshot) and write the new state through ``pipe``, or,
+    with ``old=None``, dedup ``pages`` over an empty state (the batch).
+    Returns the canonical table.  See the module docstring."""
+    spark, cfg = pipe.spark, pipe.cfg
+    merging = old is not None
+    if not merging:
+        # limit(0): an empty relation Catalyst can see, unlike an empty RDD
+        old = {
+            s: spark.createDataFrame([], schema).limit(0)
+            for s, schema in STAGE_SCHEMAS.items()
+        }
+    o_docs, o_reps, o_edges, o_cc, o_canon = (old[s] for s in STAGE_SCHEMAS)
+    d: dict[str, DataFrame] = {}  # each stage's delta part
+    counted: dict[str, Observation] = {}
+
+    def pin(df: DataFrame) -> DataFrame:
+        # a pin would hide an empty frame's emptiness from Catalyst
+        return df.localCheckpoint(eager=False) if merging else df
+
+    def part(name: str, df: DataFrame) -> DataFrame:
+        """Stage ``name``'s delta part: pinned, its rows observed by the
+        stage's write."""
+        if merging:
+            counted[name] = Observation()
+            df = pin(df).observe(counted[name], F.count(F.lit(1)).alias("n"))
+        d[name] = df
+        return df
+
+    def stage(name: str, build) -> DataFrame:
+        out = pipe._stage(name, build, force)
+        if not merging:
+            d[name] = out  # the whole stage is the delta part
+        return out
+
+    def rows(name: str) -> int:
+        """Rows of stage ``name``'s delta part."""
+        if merging:
+            return counted[name].get["n"]
+        return pipe._recorded_rows(name, d[name])
+
+    def small(df: DataFrame, bound: int) -> DataFrame:
+        """``df`` as a broadcast join side when its rows are within the
+        cutover.  ``bound`` is at least its rows; over the cutover a merge
+        counts them (over an empty state the bounds that matter are
+        exact)."""
+        if merging and bound > cfg.attach_broadcast_max_rows:
+            bound = df.count()
+        return F.broadcast(df) if bound <= cfg.attach_broadcast_max_rows else df
+
+    # ---- s1: append the delta -------------------------------------------
+    def build_s1() -> DataFrame:
+        # re-delivered fetches (same url+warc_ts → same doc_id) are dropped
+        # BEFORE the write: a re-delivery appended to s1_docs would make
+        # the NEXT delta touching those clusters double-count it in the
+        # vote (fr/n_variants inflation)
+        new = build_docs(pages, cfg).join(o_docs.select("doc_id"), "doc_id", "left_anti")
+        return o_docs.unionByName(part("s1_docs", new))
+
+    docs = stage("s1_docs", build_s1)
+
+    # ---- s2: sign only never-seen texts ---------------------------------
+    def build_s2() -> DataFrame:
+        main = d["s1_docs"].filter(~F.col("bypass")).select(
+            "doc_id", "text", *_TEXT_KEY
+        )
+        fresh = distinct_text_reps(main, cfg).join(
+            o_reps.select(*_TEXT_KEY), _TEXT_KEY, "left_anti"
+        )
+        # drop the RAW text before with_signatures: its repartition
+        # exchange otherwise ships text AND norm_text (2x the bytes) when
+        # only norm_text feeds the signature UDF
+        signed = with_signatures(fresh.drop("text"), cfg).select(
+            *STAGE_COLUMNS["s2_reps"]
+        )
+        # a pure append
+        return o_reps.unionByName(part("s2_reps", signed))
+
+    reps = stage("s2_reps", build_s2)
+
+    # ---- s3: candidates only where a fresh rep can matter ----------------
+    buckets = Observation()
+
+    def build_s3() -> DataFrame:
+        # touched buckets: the fresh reps' bands, plus the old reps' bands
+        # (a narrow JVM pass over the STORED minhash) in a bucket of theirs
+        n_fresh = rows("s2_reps")
+        n_old = pipe._recorded_rows("s2_reps", reps) - n_fresh
+        fresh_bands = band_explode(d["s2_reps"].select("rep_id", "minhash"), cfg)
+        keys = small(fresh_bands.select(*_BAND_KEY), n_fresh * cfg.bands)
+        old_bands = pin(
+            band_explode(o_reps.select("rep_id", "minhash"), cfg).join(
+                keys, _BAND_KEY, "left_semi"
+            )
+        )
+        cand, _ = bucketed_pairs(
+            fresh_bands.unionByName(old_bands), _BAND_KEY, cfg.bucket_size_cap,
+            # with no fresh rep no bucket is touched, and an empty aggregate
+            # reports no observed row
+            observation=buckets if n_fresh else None,
+        )
+        # old×old pairs are already in the old edges: drop them
+        olds = small(old_bands.select(F.col("rep_id").alias("_old")), n_old * cfg.bands)
+        old_a, old_b = F.col("id_a") == F.col("_old"), F.col("id_b") == F.col("_old")
+        pairs = cand.join(olds, old_a, "left_anti").unionByName(
+            cand.join(olds, old_a, "left_semi").join(olds, old_b, "left_anti")
+        )
+        # verify's payload: the fresh reps and the old reps of the touched
+        # buckets; the recorded s2 row count bounds it for the
+        # broadcast-vs-fold attach
+        payload = d["s2_reps"].unionByName(
+            o_reps.join(olds, F.col("rep_id") == F.col("_old"), "left_semi")
+        )
+        return o_edges.unionByName(part("s3_edges", pipe._verify(pairs, payload)))
+
+    edges = stage("s3_edges", build_s3)
+    if pipe.report.stages["s3_edges"]["resumed"]:
+        # the run rewrites REPORT.json: keep the skew counters of the run
+        # that built s3, marked as carried
+        pipe._carry_bucket_stats()
+    else:
+        # When no bucket holds two reps the pair join is empty, AQE drops
+        # the plan below it, and the observation completes with an empty
+        # row: every bucket is a singleton
+        seen = {"capped": 0, "biggest": None}
+        if rows("s2_reps"):
+            seen = buckets.get if buckets._jo.getRow().length() else {"capped": 0, "biggest": 1}
+        pipe.report.stage(
+            "s3_buckets", n_capped_buckets=int(seen["capped"] or 0),
+            max_bucket_size=seen["biggest"],
+        )
+
+    # ---- s4: CC on the delta graph contracted to old cluster ids --------
+    def build_s4() -> DataFrame:
+        new_edges = d["s3_edges"].select("id_a", "id_b")
+        n_ends = 2 * rows("s3_edges")  # bounds every frame below
+        ends = new_edges.select(F.col("id_a").alias("rep_id")).unionByName(
+            new_edges.select(F.col("id_b").alias("rep_id"))
+        )
+        # clustered endpoint → its old cluster id; any other endpoint
+        # stands for itself
+        old_of = pin(o_cc.join(small(ends, n_ends), "rep_id", "left_semi"))
+        node = small(old_of, n_ends)
+        contracted = (
+            new_edges.join(node.withColumnRenamed("rep_id", "id_a"), "id_a", "left")
+            .select(F.coalesce("cluster_id", "id_a").alias("id_a"), "id_b")
+            .join(node.withColumnRenamed("rep_id", "id_b"), "id_b", "left")
+            .select("id_a", F.coalesce("cluster_id", "id_b").alias("id_b"))
+            .filter(F.col("id_a") != F.col("id_b"))
+        )
+        # node → new cluster; the nodes are old cluster ids and reps that
+        # had no cluster
+        moves = part("s4_cc", connected_components(contracted, cfg))
+        relabel = small(
+            moves.select(
+                F.col("rep_id").alias("cluster_id"), F.col("cluster_id").alias("new_id")
+            ),
+            n_ends,
+        )
+        relabelled = o_cc.join(relabel, "cluster_id", "left").select(
+            "rep_id", F.coalesce("new_id", "cluster_id").alias("cluster_id")
+        )
+        newly_clustered = moves.join(
+            small(old_of.select(F.col("cluster_id").alias("rep_id")), n_ends),
+            "rep_id", "left_anti",
+        )
+        return relabelled.unionByName(newly_clustered)
+
+    cc = stage("s4_cc", build_s4)
+
+    # ---- s5: re-vote only affected clusters ------------------------------
+    n_affected = Observation()
+
+    def build_s5() -> DataFrame:
+        # touched: every rep with a delta member, with its new cluster.
+        # Every fresh rep is one, and its cluster (if any) is in the CC
+        # map; an old rep is one if its text has a delta doc.
+        n_docs = rows("s1_docs")  # bounds the touched reps
+        fresh = d["s2_reps"].select(*_TEXT_KEY, "rep_id").join(
+            small(d["s4_cc"], rows("s4_cc")), "rep_id", "left"
+        ).select(
+            *_TEXT_KEY, "rep_id", F.coalesce("cluster_id", "rep_id").alias("cluster_id")
+        )
+        texts = d["s1_docs"].filter(~F.col("bypass")).select(*_TEXT_KEY)
+        old_touched = o_reps.select(*_TEXT_KEY, "rep_id").join(
+            small(texts, n_docs), _TEXT_KEY, "left_semi"
+        )
+        their_cc = cc.join(small(old_touched.select("rep_id"), n_docs), "rep_id", "left_semi")
+        old_touched = pin(old_touched.join(small(their_cc, n_docs), "rep_id", "left"))
+        affected = fresh.select("cluster_id").unionByName(
+            old_touched.select(F.coalesce("cluster_id", "rep_id").alias("cluster_id"))
+        )
+        # the other members of the affected clusters are old reps with a
+        # cluster; s4's row count bounds them
+        clustered = small(
+            cc.join(small(affected, n_docs), "cluster_id", "left_semi"),
+            pipe._recorded_rows("s4_cc", cc),
+        )
+        old_members = o_reps.select(*_TEXT_KEY, "rep_id").join(clustered, "rep_id")
+        members = fresh.unionByName(old_members).unionByName(
+            old_touched.filter(F.col("cluster_id").isNull()).select(
+                *_TEXT_KEY, "rep_id", F.col("rep_id").alias("cluster_id")
+            )
+        )
+        # containment scores over the members' edges: all new edges, and
+        # the old edges of clustered members (both ends of an edge are in
+        # one cluster, so one end decides)
+        member_edges = d["s3_edges"].unionByName(
+            o_edges.join(clustered.select(F.col("rep_id").alias("id_a")), "id_a", "left_semi")
+        )
+        clusters = pin(
+            members.join(rep_containment(member_edges), "rep_id", "left").select(
+                *_TEXT_KEY, "cluster_id", "containment"
+            )
+        )
+        # new bypass docs are brand-new singleton clusters (old bypass rows
+        # are untouched and carried over).  Ungated, the vote emits one row
+        # per cluster, and a main cluster's canonical text is routed main,
+        # so the affected-cluster count is an observed metric of the s5
+        # write, not a count job; the size gate applies after it.
+        voted = vote_clusters(
+            docs.filter(~F.col("bypass")),
+            small(clusters, pipe._recorded_rows("s2_reps", reps)),
+            d["s1_docs"].filter(F.col("bypass")), cfg,
+        ).observe(n_affected, F.count_if(is_main(cfg)).alias("n")).filter(
+            size_gate(cfg.min_cluster_size)
+        )
+        # merge SOURCES: cluster ids that vanished in a merge; their old
+        # canonical rows must not sit next to the merged cluster's new row
+        vanished = d["s4_cc"].filter(F.col("rep_id") != F.col("cluster_id")).select(
+            F.col("rep_id").alias("cluster_id")
+        )
+        carried = o_canon.join(
+            small(affected.unionByName(vanished), n_docs + rows("s4_cc")),
+            "cluster_id", "left_anti",
+        ).select(*STAGE_COLUMNS["s5_canonical"])
+        return carried.unionByName(voted)
+
+    canonical = stage("s5_canonical", build_s5)
+    if not pipe.report.stages["s5_canonical"]["resumed"]:
+        pipe.report.stage("s5_canonical", n_affected_clusters=n_affected.get["n"])
+    pipe._finalize(docs, reps, edges, canonical)
+    return canonical
 
 
 def dedup_pages_incremental(
@@ -151,184 +438,5 @@ def dedup_pages_incremental(
             f"missing snapshots {missing} (point it at the workdir of a "
             f"previous dedup_pages or merge run)"
         )
-    old_docs, old_reps, old_edges, old_cc, old_canon = (
-        read_snapshot(old, s) for s in STAGE_COLUMNS
-    )
-    pipe = DedupPipeline(spark, out_dir, cfg)
-    # the delta-sized part of each stage, pinned (lazy localCheckpoint) by
-    # the stage that builds it; under AQE a pin runs its shuffles at once
-    # and its last stage in the first job that reads it
-    d: dict[str, DataFrame] = {}
-
-    # ---- s1: append the delta -------------------------------------------
-    def build_s1() -> DataFrame:
-        # re-delivered fetches (same url+warc_ts → same doc_id) are dropped
-        # BEFORE the write: a re-delivery appended to s1_docs would make
-        # the NEXT delta touching those clusters double-count it in the
-        # vote (fr/n_variants inflation)
-        d["docs"] = (
-            build_docs(new_pages, cfg)
-            .join(old_docs.select("doc_id"), "doc_id", "left_anti")
-            .localCheckpoint(eager=False)
-        )
-        return old_docs.unionByName(d["docs"])
-
-    docs = pipe._stage("s1_docs", build_s1, force=True)
-
-    # ---- s2: sign only never-seen texts ---------------------------------
-    def build_s2() -> DataFrame:
-        delta_main = d["docs"].filter(~F.col("bypass")).select(
-            "doc_id", "text", "text_hash", "text_hash2"
-        )
-        # one row per delta text: the texts whose clusters the vote must
-        # revisit
-        delta_reps = distinct_text_reps(delta_main, cfg).localCheckpoint(eager=False)
-        d["texts"] = delta_reps.select(*_TEXT_KEY)
-        fresh = delta_reps.join(old_reps.select(*_TEXT_KEY), _TEXT_KEY, "left_anti")
-        d["reps"] = (
-            with_signatures(fresh.drop("text"), cfg)
-            .select(*STAGE_COLUMNS["s2_reps"])
-            .localCheckpoint(eager=False)
-        )
-        # a pure append; the projection also reads a state whose s2_reps
-        # still carries columns this version no longer writes
-        return old_reps.select(*STAGE_COLUMNS["s2_reps"]).unionByName(d["reps"])
-
-    reps = pipe._stage("s2_reps", build_s2, force=True)
-    fresh_ids = d["reps"].select("rep_id")
-
-    # ---- s3: candidates only where a fresh rep can matter ----------------
-    # the buckets a fresh rep falls in, from the fresh reps' bands alone;
-    # every rep's bands are a narrow JVM pass over the STORED minhash (no
-    # signature UDF re-runs), probed against them by broadcast; then only
-    # pairs with a fresh rep on >=1 side are verified
-    fresh_keys = band_explode(d["reps"].select("rep_id", "minhash"), cfg).select(
-        *_BAND_KEY
-    )
-    cand, bucket_stats = bucketed_pairs(
-        band_explode(reps.select("rep_id", "minhash"), cfg).join(
-            F.broadcast(fresh_keys), _BAND_KEY, "left_semi"
-        ),
-        _BAND_KEY,
-        cfg.bucket_size_cap,
-    )
-    try:
-        def build_s3() -> DataFrame:
-            pairs = _either_side_in(cand, fresh_ids).localCheckpoint(eager=False)
-            # verify's payload: only the reps these pairs touch, by a
-            # broadcast of their endpoint ids.  It holds both ids of every
-            # pair, duplicates included, so it grows with the fresh-side
-            # candidate pairs (up to bucket_size_cap^2 per touched bucket),
-            # not with the delta's reps.  The recorded s2 row count bounds
-            # the payload for the broadcast-vs-fold choice
-            ends = pairs.select(F.col("id_a").alias("rep_id")).unionByName(
-                pairs.select(F.col("id_b").alias("rep_id"))
-            )
-            payload = reps.join(F.broadcast(ends), "rep_id", "left_semi")
-            d["edges"] = pipe._verify(pairs, payload).localCheckpoint(eager=False)
-            return old_edges.unionByName(d["edges"])
-
-        edges = pipe._stage("s3_edges", build_s3, force=True)
-        # stats materialized as a side effect of the s3 write
-        pipe._record_bucket_stats(bucket_stats)
-    finally:
-        bucket_stats.unpersist()
-
-    # ---- s4: CC on the delta graph contracted to old cluster ids --------
-    def build_s4() -> DataFrame:
-        new_edges = d["edges"].select("id_a", "id_b")
-        ends = new_edges.select(F.col("id_a").alias("rep_id")).unionByName(
-            new_edges.select(F.col("id_b").alias("rep_id"))
-        )
-        # clustered endpoint → its old cluster id; any other endpoint
-        # stands for itself
-        old_of = (
-            old_cc.join(F.broadcast(ends), "rep_id", "left_semi")
-            .localCheckpoint(eager=False)
-        )
-        node = F.broadcast(old_of)
-        contracted = (
-            new_edges.join(node.withColumnRenamed("rep_id", "id_a"), "id_a", "left")
-            .select(F.coalesce("cluster_id", "id_a").alias("id_a"), "id_b")
-            .join(node.withColumnRenamed("rep_id", "id_b"), "id_b", "left")
-            .select("id_a", F.coalesce("cluster_id", "id_b").alias("id_b"))
-            .filter(F.col("id_a") != F.col("id_b"))
-        )
-        # node → new cluster; the nodes are old cluster ids and reps that
-        # had no cluster
-        d["moves"] = connected_components(contracted, cfg).localCheckpoint(eager=False)
-        relabel = F.broadcast(
-            d["moves"].select(
-                F.col("rep_id").alias("cluster_id"), F.col("cluster_id").alias("new_id")
-            )
-        )
-        relabelled = old_cc.join(relabel, "cluster_id", "left").select(
-            "rep_id", F.coalesce("new_id", "cluster_id").alias("cluster_id")
-        )
-        newly_clustered = d["moves"].join(
-            F.broadcast(old_of.select(F.col("cluster_id").alias("rep_id"))),
-            "rep_id", "left_anti",
-        )
-        return relabelled.unionByName(newly_clustered)
-
-    cc = pipe._stage("s4_cc", build_s4, force=True)
-
-    # ---- s5: re-vote only affected clusters ------------------------------
-    n_affected = Observation()
-
-    def build_s5() -> DataFrame:
-        # every text with a delta member, with its new cluster; `single`
-        # marks a rep with no s4 row, which is a cluster of its own
-        touched_ids = reps.join(
-            F.broadcast(d["texts"]), _TEXT_KEY, "left_semi"
-        ).select("rep_id")
-        touched_cc = cc.join(F.broadcast(touched_ids), "rep_id", "left_semi")
-        touched = (
-            touched_ids.join(F.broadcast(touched_cc), "rep_id", "left")
-            .select(
-                "rep_id",
-                F.coalesce("cluster_id", "rep_id").alias("cluster_id"),
-                F.col("cluster_id").isNull().alias("single"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        affected = touched.select("cluster_id")
-        # every member of an affected cluster: its clustered reps, plus the
-        # touched reps that are clusters of their own
-        assign = F.broadcast(
-            cc.join(F.broadcast(affected), "cluster_id", "left_semi").unionByName(
-                touched.filter("single").select("rep_id", "cluster_id")
-            )
-        )
-        # containment scores for the affected members, over old + delta edges
-        aff_clusters = (
-            reps.select(*_TEXT_KEY, "rep_id")
-            .join(assign, "rep_id")
-            .join(rep_containment(_either_side_in(edges, assign)), "rep_id", "left")
-            .localCheckpoint(eager=False)
-        )
-        # new bypass docs are brand-new singleton clusters (old bypass rows
-        # are untouched and carried over).  Ungated, the vote emits one row
-        # per cluster, and a main cluster's canonical text is routed main,
-        # so the affected-cluster count is an observed metric of the s5
-        # write, not a count job; the size gate applies after it.
-        voted = vote_clusters(
-            docs.filter(~F.col("bypass")), F.broadcast(aff_clusters),
-            d["docs"].filter(F.col("bypass")), cfg, min_cluster_size=1,
-        ).observe(n_affected, F.count_if(is_main(cfg)).alias("n")).filter(
-            size_gate(cfg.min_cluster_size)
-        )
-        # merge SOURCES: cluster ids that vanished in a merge; their old
-        # canonical rows must not sit next to the merged cluster's new row
-        vanished = d["moves"].filter(F.col("rep_id") != F.col("cluster_id")).select(
-            F.col("rep_id").alias("cluster_id")
-        )
-        carried = old_canon.join(
-            F.broadcast(affected.unionByName(vanished)), "cluster_id", "left_anti"
-        )
-        return carried.unionByName(voted.select(*old_canon.columns))
-
-    canonical = pipe._stage("s5_canonical", build_s5, force=True)
-    pipe.report.stage("s5_canonical", n_affected_clusters=n_affected.get["n"])
-    pipe._finalize(docs, reps, edges, canonical)
-    return canonical
+    state = {s: read_snapshot(old, s) for s in STAGE_COLUMNS}
+    return run_stages(DedupPipeline(spark, out_dir, cfg), new_pages, state, force=True)

@@ -31,8 +31,9 @@ Output columns (the FR/RR aux-tag analog, ``pair.cpp:54-68``):
   the canonical itself — the duplex-strand count analog;
 * ``n_variants`` — distinct texts in the cluster (the NM-delta analog).
 
-Everything is JVM-side DataFrame ops (two aggregations + one window); no
-Python in this stage.
+Everything is JVM-side DataFrame ops (four hash aggregations, no window);
+no Python in this stage.  The vote keeps every cluster: the caller applies
+the ``min_cluster_size`` gate (:func:`size_gate`) to its output.
 """
 
 from __future__ import annotations
@@ -43,8 +44,8 @@ from ..config import DedupConfig
 
 
 def size_gate(min_cluster_size: int):
-    """The A7 ``supporting_reads`` gate on voted rows: the cluster has at
-    least ``min_cluster_size`` members."""
+    """The A7 ``supporting_reads`` gate (``cluster.cpp:138-182``) on voted
+    rows: the cluster has at least ``min_cluster_size`` members."""
     return F.col("fr") >= min_cluster_size
 
 
@@ -56,14 +57,9 @@ def mirror_key(url_col="url"):
     )
 
 
-def consensus_vote(
-    members: DataFrame, cfg: DedupConfig, min_cluster_size: int | None = None
-) -> DataFrame:
+def consensus_vote(members: DataFrame, cfg: DedupConfig) -> DataFrame:
     """members (doc_id, url, warc_ts, html, text, lang, text_hash,
     cluster_id) → one canonical row per cluster with fr/rr/n_variants.
-
-    ``min_cluster_size`` (A7 ``supporting_reads`` gate,
-    ``cluster.cpp:138-182``): clusters smaller than it are dropped when set.
 
     Shuffle-byte discipline: the election itself runs on metadata only —
     ``text`` (the fat payload) is stripped up front (its length, the only
@@ -138,9 +134,6 @@ def consensus_vote(
         )
         .drop("mirror_n", "mirror_key", "votes")
     )
-    gate = min_cluster_size if min_cluster_size is not None else cfg.min_cluster_size
-    if gate > 1:
-        out = out.filter(size_gate(gate))
     if has_text:
         out = out.drop("text_len").join(text_by_doc, "doc_id")
     return out

@@ -80,12 +80,11 @@ def _near_dup_losers(d: DataFrame, id_col: str, text_col: str) -> DataFrame:
         ),
         cfg,
     ).persist()
-    edges, stats = candidate_pairs(signed.select("rep_id", "minhash"), cfg)
+    edges, _ = candidate_pairs(signed.select("rep_id", "minhash"), cfg)
     try:
         verified = verify_pairs(edges, signed, cfg, n_payload_rows=signed.count())
         cc = connected_components(verified.select("id_a", "id_b"), cfg)
     finally:
-        stats.unpersist()
         signed.unpersist()
     return cc.filter(F.col("rep_id") != F.col("cluster_id")).select(
         F.col("rep_id").alias(id_col)

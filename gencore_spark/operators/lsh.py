@@ -31,7 +31,7 @@ splitting handles residual imbalance inside the cap.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from ..config import DedupConfig
 
@@ -63,7 +63,8 @@ def band_explode(signed: DataFrame, cfg: DedupConfig) -> DataFrame:
 
 
 def bucketed_pairs(
-    exploded: DataFrame, bucket_cols: list[str], cap: int, id_col: str = "rep_id"
+    exploded: DataFrame, bucket_cols: list[str], cap: int, id_col: str = "rep_id",
+    observation: Observation | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Generic skew-capped bucket self-join.
 
@@ -76,15 +77,15 @@ def bucketed_pairs(
       members keep O(1) candidate edges each, all fully verified
       downstream, covering both homogeneous and heterogeneous
       mega-buckets);
-    * bucket_stats — one row per bucket: size + capped flag.  The returned
-      df is **persisted** (it feeds both the pair join and the caller's
-      metrics); the CALLER owns the cache and must ``unpersist()`` it once
-      edges and stats are materialized — a long-lived session running many
-      dedup queries would otherwise accumulate executor storage.
+    * bucket_stats — one row per bucket: size + capped flag.
 
-    Shared by the batch's band join (:func:`candidate_pairs`) and the
-    merge's touched-bucket join (``delta.py``) — one skew policy, tested
-    once.
+    ``observation``, when given, observes ``capped`` (the number of capped
+    buckets) and ``biggest`` (the largest bucket size) on the bucket
+    aggregate the edges are built from, so whichever action first runs the
+    edges reports them: no job of their own.
+
+    Shared by :func:`candidate_pairs` and the stage list's touched-bucket
+    join (``delta.py``) — one skew policy, tested once.
     """
     from pyspark.sql import Window
 
@@ -95,8 +96,13 @@ def bucketed_pairs(
             F.min(id_col).alias("anchor_id"),
         )
         .withColumn("capped", F.col("bucket_size") > cap)
-        .persist()
     )
+    if observation is not None:
+        stats = stats.observe(
+            observation,
+            F.sum(F.col("capped").cast("int")).alias("capped"),
+            F.max("bucket_size").alias("biggest"),
+        )
     # singleton buckets generate no pairs — drop them before the join
     # (the dominant case: unique docs)
     active = stats.filter(F.col("bucket_size") >= 2)

@@ -11,15 +11,21 @@ snapshots):
           ──► s4_cc        connected components                 (components)
           ──► s5_canonical consensus vote + bypass re-union     (consensus)
 
+One stage list serves both entry points: :func:`dedup_pages` runs the daily
+merge's five builders (``delta.run_stages``) over an empty old state; this
+module holds the stage schemas, the snapshot runner and the report.  The
+empty state is typed (``STAGE_SCHEMAS``) and statically empty, so Catalyst
+removes every join with it at plan time, and the batch plans exactly the
+corpus-wide work it needs.  Over an empty state a stage's delta part is its
+snapshot read-back, so the batch resumes stage by stage.
+
 Every stage snapshots to the work table and is read back, so a crashed or
 re-run job resumes mid-pipeline without recomputation.  Stage row counts
-are observed metrics of the snapshot write, not count jobs, and the
-read-back declares the schema just written, so it infers none.
-
-The daily merge (``delta.py``) writes its snapshots through the same
-``_stage``, builders and ``STAGE_COLUMNS`` schema, so both entry points
-write one ``REPORT.json`` schema: per-stage rows, ``s3_attach``,
-``s3_buckets``, ``summary`` and ``lineage``.
+are observed metrics of the snapshot write, not count jobs, and every read
+declares its stage's schema, so it infers none; a stale snapshot is caught
+from one parquet footer on the driver.  Both entry points write one
+``REPORT.json`` schema: per-stage rows, ``s3_attach``, ``s3_buckets``,
+``summary`` and ``lineage``.
 
 Scale notes (the design is for 10^3 executors / 10^14 bytes):
 
@@ -32,7 +38,7 @@ Scale notes (the design is for 10^3 executors / 10^14 bytes):
   broadcast cap; explode+fold above it),
   s4 none up to 100,000 verified pairs (the CC cutover: one bounded fetch,
   union-find on the driver) and O(log n) large-star/small-star rounds
-  above it, s5 three hash aggs (no windows) — all keyed on
+  above it, s5 four hash aggregations (no windows) — all keyed on
   ids or hashes, AQE handles skew inside the cap, the mega-bucket cap
   handles the rest;
 * ``localCheckpoint`` truncates the CC rounds' lineage; stage
@@ -45,63 +51,45 @@ import os
 import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import types as T
 
 from .config import DEFAULT_CONFIG, DedupConfig
-from .operators.components import connected_components
-from .operators.consensus import consensus_vote
-from .operators.exact import (
-    distinct_text_reps,
-    route,
-    with_doc_ids,
-    with_signatures,
-    with_text_hash,
-)
-from .operators.lsh import candidate_pairs
 from .operators.metrics import RunReport, partition_and_size_stats
 from .operators.verify import verify_pairs
 from .sources import TableIO
 
-# One snapshot schema: the columns every reader of a stage snapshot relies
-# on (batch resume, the incremental merge's state reads).
-STAGE_COLUMNS = {
-    "s1_docs": ["doc_id", "url", "warc_ts", "text", "lang", "text_hash",
-                "text_hash2", "bypass"],
-    "s2_reps": ["text_hash", "text_hash2", "rep_id", "norm_text", "minhash",
-                "simhash"],
-    "s3_edges": ["id_a", "id_b", "jaccard", "cont_a", "cont_b", "sim_hamming"],
-    "s4_cc": ["rep_id", "cluster_id"],
-    "s5_canonical": ["doc_id", "url", "warc_ts", "text", "lang", "cluster_id",
-                     "fr", "rr", "n_variants", "vote_ratio", "low_confidence"],
+
+_L, _S, _D, _I = T.LongType(), T.StringType(), T.DoubleType(), T.IntegerType()
+_B, _TS = T.BooleanType(), T.TimestampType()
+
+
+def _schema(**fields: T.DataType) -> T.StructType:
+    return T.StructType([T.StructField(name, typ) for name, typ in fields.items()])
+
+
+# One snapshot schema per stage: what every stage writes and every reader
+# declares (batch resume, the merge's state reads, the empty batch state).
+STAGE_SCHEMAS = {
+    "s1_docs": _schema(doc_id=_L, url=_S, warc_ts=_TS, text=_S, lang=_S,
+                       text_hash=_L, text_hash2=_L, bypass=_B),
+    "s2_reps": _schema(text_hash=_L, text_hash2=_L, rep_id=_L, norm_text=_S,
+                       minhash=T.ArrayType(_L), simhash=_L),
+    "s3_edges": _schema(id_a=_L, id_b=_L, jaccard=_D, cont_a=_D, cont_b=_D,
+                        sim_hamming=_I),
+    "s4_cc": _schema(rep_id=_L, cluster_id=_L),
+    # the vote's output order
+    "s5_canonical": _schema(doc_id=_L, cluster_id=_L, text_hash=_L, url=_S,
+                            warc_ts=_TS, lang=_S, fr=_L, n_variants=_L, rr=_I,
+                            vote_ratio=_D, low_confidence=_B, text=_S),
 }
-# per-doc columns a consensus-vote member carries besides its cluster
-_MEMBER_COLUMNS = ["doc_id", "url", "warc_ts", "text", "lang", "text_hash"]
-
-
-def _ensure_text(pages: DataFrame) -> DataFrame:
-    """html-only ingest path: rows arriving without ``text`` get it extracted
-    from ``html`` (the input_hint's byte-identical extractor, as a pandas
-    UDF).  Split-then-union rather than ``coalesce(text, udf(html))``: an
-    ArrowEvalPython node computes its UDF for EVERY row in the batch before
-    the conditional picks, so the naive coalesce would ship every page's
-    html through Python even when text is already present — on a crawl
-    where most rows carry text that is most of the input bytes."""
-    from .functions.udfs import extract_text_udf
-
-    if "text" not in pages.columns:
-        return pages.withColumn("text", extract_text_udf()(F.col("html")))
-    has_text = pages.filter(F.col("text").isNotNull())
-    needs = pages.filter(F.col("text").isNull()).withColumn(
-        "text", extract_text_udf()(F.col("html"))
-    )
-    return has_text.unionByName(needs)
-
-
+STAGE_COLUMNS = {name: schema.fieldNames() for name, schema in STAGE_SCHEMAS.items()}
 def read_snapshot(io: TableIO, name: str) -> DataFrame:
-    """Read stage snapshot ``name`` and fail FAST on a stale workdir: a
-    snapshot written by an older pipeline version reads cleanly here but
-    explodes mid-plan later with an opaque unresolved-column error."""
-    out = io.read(name)
-    missing = set(STAGE_COLUMNS[name]) - set(out.columns)
+    """Read stage snapshot ``name`` with its declared schema (no Spark job)
+    and fail FAST on a stale workdir: a snapshot written by an older
+    pipeline version would otherwise explode mid-plan later with an opaque
+    unresolved-column error.  Columns the schema does not declare are not
+    read."""
+    missing = set(STAGE_COLUMNS[name]) - set(io.columns(name))
     if missing:
         raise ValueError(
             f"stale workdir: snapshot '{name}' at {io.root} is "
@@ -109,38 +97,7 @@ def read_snapshot(io: TableIO, name: str) -> DataFrame:
             f"pipeline version?). Wipe the workdir or re-run with "
             f"force=True."
         )
-    return out
-
-
-def build_docs(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """s1: doc ids, bypass routing and the exact text hash of every page."""
-    main, bypass = route(with_doc_ids(_ensure_text(pages)), cfg)
-    main = with_text_hash(main).withColumn("bypass", F.lit(False))
-    bypass = with_text_hash(bypass).withColumn("bypass", F.lit(True))
-    # html is dropped HERE and never read again
-    return main.unionByName(bypass).select(*STAGE_COLUMNS["s1_docs"])
-
-
-def vote_clusters(
-    main_docs: DataFrame, clusters: DataFrame, bypass_docs: DataFrame,
-    cfg: DedupConfig, min_cluster_size: int | None = None,
-) -> DataFrame:
-    """s5: consensus vote over cluster members.  Each main doc joins its
-    text's row in ``clusters`` ((text_hash, text_hash2) → (cluster_id,
-    containment)); docs without a row there are not voted.  Each bypass doc
-    is a singleton cluster of its own.  ``min_cluster_size`` overrides the
-    config's size gate (``consensus_vote``)."""
-    main_members = main_docs.join(clusters, ["text_hash", "text_hash2"]).select(
-        *_MEMBER_COLUMNS, "cluster_id", "containment"
-    )
-    bypass_members = bypass_docs.select(
-        *_MEMBER_COLUMNS,
-        F.col("doc_id").alias("cluster_id"),
-        F.lit(None).cast("double").alias("containment"),
-    )
-    return consensus_vote(
-        main_members.unionByName(bypass_members), cfg, min_cluster_size
-    )
+    return io.read(name, schema=STAGE_SCHEMAS[name])
 
 
 class DedupPipeline:
@@ -193,98 +150,11 @@ class DedupPipeline:
         signed = reps.select("rep_id", "norm_text", "simhash", "minhash")
         return verify_pairs(edges, signed, self.cfg, n_payload_rows=n_reps)
 
-    def _record_bucket_stats(self, bucket_stats: DataFrame) -> None:
-        """Fold the LSH bucket stats into the ``s3_buckets`` counters.  Run
-        it after s3 has materialized: the persisted stats were populated as
-        a side effect, so this is a tiny cached-scan job instead of a
-        standalone explode+groupBy job."""
-        row = bucket_stats.agg(
-            F.sum(F.col("capped").cast("int")).alias("capped"),
-            F.max("bucket_size").alias("biggest"),
-        ).collect()[0]
-        self.report.stage(
-            "s3_buckets",
-            n_capped_buckets=int(row["capped"] or 0),
-            max_bucket_size=row["biggest"],
-        )
-
     def run(self, pages: DataFrame, force: bool = False) -> DataFrame:
-        cfg = self.cfg
-        docs = self._stage("s1_docs", lambda: build_docs(pages, cfg), force)
+        # the stage list lives with the merge (delta.py imports this module)
+        from .delta import run_stages
 
-        def build_reps() -> DataFrame:
-            main = docs.filter(~F.col("bypass")).select(
-                "doc_id", "text", "text_hash", "text_hash2"
-            )
-            # drop the RAW text before with_signatures: its repartition
-            # exchange otherwise ships text AND norm_text (2x the bytes)
-            # when only norm_text feeds the signature UDF (guide §2.3:
-            # project before the exchange)
-            return with_signatures(
-                distinct_text_reps(main, cfg).drop("text"), cfg
-            ).select(*STAGE_COLUMNS["s2_reps"])
-
-        reps = self._stage("s2_reps", build_reps, force)
-
-        bucket_stats_holder: list[DataFrame] = []
-
-        def build_edges() -> DataFrame:
-            edges, bucket_stats = candidate_pairs(reps.select("rep_id", "minhash"), cfg)
-            bucket_stats_holder.append(bucket_stats)
-            return self._verify(edges, reps)
-
-        # try/finally owns the bucket-stats cache lifetime: a failure
-        # between candidate_pairs and the post-s4 agg (e.g. a failed CC
-        # job) must not leak the persist for the session lifetime.
-        try:
-            verified = self._stage("s3_edges", build_edges, force)
-
-            def build_cc() -> DataFrame:
-                return connected_components(verified.select("id_a", "id_b"), cfg)
-
-            cc = self._stage("s4_cc", build_cc, force)
-
-            # Bucket-stat metrics AFTER s4: by now the s3 snapshot write
-            # has materialized them, so the fold reads the populated cache
-            # — one less barrier on the fixed-cost path.
-            if bucket_stats_holder:
-                self._record_bucket_stats(bucket_stats_holder[0])
-            else:
-                # s3 resumed from its snapshot, so the bucket stats were
-                # never recomputed this run — but this run REWRITES
-                # REPORT.json, and silently dropping the skew counters from
-                # the report would read as "no buckets were capped".  Carry
-                # the prior run's record forward, marked as such.
-                self._carry_bucket_stats()
-        finally:
-            # cache lifetime is exactly this run, success or not
-            for bs in bucket_stats_holder:
-                bs.unpersist()
-
-        def build_canonical() -> DataFrame:
-            from .operators.verify import rep_containment
-
-            # every distinct text gets a cluster: CC assignment or itself,
-            # plus its election score (best containment in a verified
-            # neighbor — the A6 most-contained rule)
-            rep_clusters = (
-                reps.select("text_hash", "text_hash2", "rep_id")
-                .join(cc, "rep_id", "left")
-                .join(rep_containment(verified), "rep_id", "left")
-                .select(
-                    "text_hash", "text_hash2",
-                    F.coalesce("cluster_id", "rep_id").alias("cluster_id"),
-                    "containment",
-                )
-            )
-            return vote_clusters(
-                docs.filter(~F.col("bypass")), rep_clusters,
-                docs.filter(F.col("bypass")), cfg,
-            )
-
-        canonical = self._stage("s5_canonical", build_canonical, force)
-        self._finalize(docs, reps, verified, canonical)
-        return canonical
+        return run_stages(self, pages, None, force)
 
     # -- reporting ----------------------------------------------------------
 

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -47,6 +48,16 @@ class TableIO:
             df.writeTo(f"gencore.{name}").createOrReplace()
         else:
             df.write.mode("overwrite").parquet(self._path(name))
+
+    def columns(self, name: str) -> list[str]:
+        """Column names of table ``name`` from its metadata, on the driver:
+        the footer of one parquet part file (every part of a Spark write
+        carries the full schema), no Spark job."""
+        if self.iceberg:
+            return self.spark.read.table(f"gencore.{name}").columns
+        path = self._path(name)
+        part = min(f for f in os.listdir(path) if f.endswith(".parquet"))
+        return pq.read_schema(os.path.join(path, part)).names
 
     def read(self, name: str, schema: StructType | None = None) -> DataFrame:
         """Read table ``name``.  A parquet read infers its schema from the

@@ -74,17 +74,22 @@ every call (no resume).
 Cost model: each stage computes its delta part ONCE and pins it
 (``localCheckpoint``) — the new docs, the freshly signed reps, the newly
 verified pairs, the CC map — and later steps read those pins instead of
-re-deriving them from the corpus-sized snapshots by anti-joins.  Over an
-empty state the delta part is the stage's snapshot read-back, which the
-batch neither pins nor counts.  A join of a corpus-sized snapshot with a
-small set broadcasts the small side when its rows are within
-``attach_broadcast_max_rows``, the cutover verify's text attach uses.  A
-bound from observed counts decides (the delta parts' rows, observed at
-their stage's write, or a stage's total rows); when the bound is over the
-cutover the merge counts the side, and above the cutover Spark plans the
-join itself, so a side the size of the corpus is never broadcast ("To
-Partition, or Not to Partition", SIGMOD'21).  Verify's payload is the fresh reps plus the old
-reps of the touched buckets.  One kind of join still builds on a
+re-deriving them from the corpus-sized snapshots by anti-joins.  A pin is
+``eager=False``, but that defers only its final result stage: creating
+it builds the plan's RDD, which runs the plan's broadcast jobs and, under
+AQE, its shuffle stages at once.  So most of a merge stage's Spark jobs
+run inside its ``build()``, before the snapshot write starts (at seed 7,
+12 of s3's 13 and 11 of s5's 26).  Over an empty state the delta part is
+the stage's snapshot read-back, which the batch neither pins nor counts.
+A join of a corpus-sized snapshot with a small set broadcasts the small
+side when its rows are within ``attach_broadcast_max_rows``, the cutover
+verify's text attach uses.  A bound from observed counts decides (the
+delta parts' rows, observed at their stage's write, or a stage's total
+rows); when the bound is over the cutover the merge counts the side, and
+above the cutover Spark plans the join itself, so a side the size of the
+corpus is never broadcast ("To Partition, or Not to Partition",
+SIGMOD'21).  Verify's payload is the fresh reps plus the old reps of the
+touched buckets.  One kind of join still builds on a
 corpus-sized side: the re-delivery and seen-text anti-joins (s1, s2).
 Signatures, bucketing, verify, CC and the vote are O(delta + touched); the
 delta-sized CC graph runs on the driver up to the CC cutover.  Each
@@ -191,7 +196,10 @@ def run_stages(
     counted: dict[str, Observation] = {}
 
     def pin(df: DataFrame) -> DataFrame:
-        # a pin would hide an empty frame's emptiness from Catalyst
+        # a pin would hide an empty frame's emptiness from Catalyst.  Lazy
+        # only in its last step: creating it builds the plan's RDD, which
+        # runs the plan's broadcasts and, under AQE, its shuffle stages
+        # there and then (module docstring, "Cost model")
         return df.localCheckpoint(eager=False) if merging else df
 
     def part(name: str, df: DataFrame) -> DataFrame:
@@ -275,18 +283,25 @@ def run_stages(
             # reports no observed row
             observation=buckets if n_fresh else None,
         )
-        # old×old pairs are already in the old edges: drop them
+        # the old reps of the touched buckets, one row each (``old_bands``
+        # has one per touched band)
         olds = small(old_bands.select(F.col("rep_id").alias("_old")), n_old * cfg.bands)
-        old_a, old_b = F.col("id_a") == F.col("_old"), F.col("id_b") == F.col("_old")
-        pairs = cand.join(olds, old_a, "left_anti").unionByName(
-            cand.join(olds, old_a, "left_semi").join(olds, old_b, "left_anti")
+        old_reps = o_reps.join(olds, F.col("rep_id") == F.col("_old"), "left_semi")
+        # old×old pairs are already in the old edges: drop them.  Each end
+        # probes the old reps once, so ``cand`` is referenced once
+        old_ids = small(old_reps.select("rep_id"), n_old)
+        pairs = (
+            cand.join(old_ids.withColumnRenamed("rep_id", "_a"),
+                      F.col("id_a") == F.col("_a"), "left")
+            .join(old_ids.withColumnRenamed("rep_id", "_b"),
+                  F.col("id_b") == F.col("_b"), "left")
+            .filter(F.col("_a").isNull() | F.col("_b").isNull())
+            .select("id_a", "id_b")
         )
         # verify's payload: the fresh reps and the old reps of the touched
         # buckets; the recorded s2 row count bounds it for the
         # broadcast-vs-fold attach
-        payload = d["s2_reps"].unionByName(
-            o_reps.join(olds, F.col("rep_id") == F.col("_old"), "left_semi")
-        )
+        payload = d["s2_reps"].unionByName(old_reps)
         return o_edges.unionByName(part("s3_edges", pipe._verify(pairs, payload)))
 
     edges = stage("s3_edges", build_s3)

@@ -7,12 +7,11 @@ from .exact import (
     with_signatures,
     with_text_hash,
 )
-from .lsh import band_explode, candidate_pairs
+from .lsh import band_explode
 from .verify import verify_pairs
 
 __all__ = [
     "band_explode",
-    "candidate_pairs",
     "connected_components",
     "consensus_vote",
     "distinct_text_reps",

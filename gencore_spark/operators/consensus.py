@@ -72,13 +72,17 @@ def consensus_vote(members: DataFrame, cfg: DedupConfig) -> DataFrame:
     if has_text:
         text_by_doc = members.select("doc_id", "text")
         members = members.withColumn("text_len", F.length("text")).drop("text")
-    # Pin the text-stripped member metadata (lazy): it feeds FOUR
+    # Pin the text-stripped member metadata: it feeds FOUR
     # aggregation branches below (votes, stats, ranked's probe side,
     # mirror_counts), and each branch is a separate evaluation of the
     # upstream members tree — in the pipeline that tree is two joins over
     # the docs/cluster tables per evaluation.  Thin rows only (~100 B/doc,
     # text already split off above), so the materialization is smaller
     # than any of the stage snapshots the pipeline already writes.
+    # ``eager=False`` defers only the final stage: creating the pin builds
+    # its RDD, which runs the members plan's broadcasts and, under AQE,
+    # its shuffle stages here, before the caller's action (4 jobs of the
+    # batch's s5 at seed 7).
     m = members.withColumn("mirror_key", mirror_key()).localCheckpoint(eager=False)
 
     votes = m.groupBy("cluster_id", "text_hash").agg(

@@ -35,26 +35,17 @@ Scale shape (the part that must survive 100 TB)
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from .textstats import word_ngrams
 
 
-def _doc_ngrams(text: Column, n: int) -> Column:
-    """Distinct word ``n``-grams of a text column (shared gram kernel).
-
-    Column form — for one-off expressions only.  On the per-row hot path
-    use :func:`_exploded_grams`, which binds the word array to an attribute
-    first: ``word_ngrams``'s transform lambda is CodegenFallback, and an
-    inlined ``split`` re-runs the regex at every ``F.get`` (n per gram
-    element — measured 13.9s → 2.9s at sf0.1 for n=8).
-    """
-    return F.array_distinct(word_ngrams(F.split(F.trim(text), r"\s+"), n))
-
-
 def _exploded_grams(df: DataFrame, keep: list[str], text_col: str, n: int) -> DataFrame:
     """One row per (``keep``, distinct word n-gram) with the word array
-    bound to an attribute before the gram lambda touches it."""
+    bound to an attribute before the gram lambda touches it:
+    ``word_ngrams``'s transform lambda is CodegenFallback, and an inlined
+    ``split`` re-runs the regex at every ``F.get`` (n per gram element —
+    measured 13.9s → 2.9s at sf0.1 for n=8)."""
     words = F.split(F.trim(F.col(text_col)), r"\s+")
     return df.select(*keep, words.alias("__words")).select(
         *keep,

@@ -1,4 +1,4 @@
-"""Domain-level curation: per-domain stats, blocklists, per-domain caps.
+"""Domain-level filtering: per-domain stats, blocklists, per-domain caps.
 
 Every production webtext pipeline gates on the registrable domain before
 any text-level work: blocklist joins (C4-style), per-domain document caps

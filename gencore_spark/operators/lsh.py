@@ -84,8 +84,8 @@ def bucketed_pairs(
     aggregate the edges are built from, so whichever action first runs the
     edges reports them: no job of their own.
 
-    Shared by :func:`candidate_pairs` and the stage list's touched-bucket
-    join (``delta.py``) — one skew policy, tested once.
+    The stage list's s3 (``delta.py``) runs it over the touched buckets'
+    bands — one skew policy, tested once.
     """
     from pyspark.sql import Window
 
@@ -189,15 +189,3 @@ def bucketed_pairs(
     edges = pairs_small.unionByName(pairs_big).distinct()
     return edges, stats
 
-
-def candidate_pairs(
-    signed: DataFrame, cfg: DedupConfig
-) -> tuple[DataFrame, DataFrame]:
-    """Distinct candidate edges (id_a < id_b) + bucket-stat metrics df.
-
-    Returns ``(edges, bucket_stats)``.  Capped buckets contribute
-    anchor-star + chain edges (see :func:`bucketed_pairs`), so neither
-    homogeneous nor heterogeneous mega-buckets cost recall.
-    """
-    exploded = band_explode(signed, cfg)
-    return bucketed_pairs(exploded, ["band_id", "band_hash"], cfg.bucket_size_cap)

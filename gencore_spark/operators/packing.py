@@ -184,8 +184,8 @@ def stratified_sample(
 ) -> DataFrame:
     """Deterministic per-stratum downsampling: keep a row iff its
     ``sample_bucket(id)`` falls under the stratum's rate (in units of
-    1/10000).  The curation step that rebalances a corpus by language /
-    source / quality bucket after dedup.
+    1/10000).  It rebalances a corpus by language / source / quality
+    bucket after dedup.
 
     Same determinism contract as :func:`hash_split` (pure function of the
     id — stable across reruns, retries, partitionings, cluster sizes; a

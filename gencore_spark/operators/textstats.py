@@ -73,29 +73,6 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def quality_expr(t: Column) -> Column:
-    """The composite 0-1 quality score as a single column expression —
-    byte-identical to :func:`quality_score` (same 6dp ratio rounding
-    BEFORE combining, pinned by pytest), for callers that need the score
-    inline without a second aggregation frame (``curation.curate_corpus``).
-    """
-    n = F.length(t).cast("double")
-    safe_n = F.greatest(n, F.lit(1.0))
-    punct_ratio = F.round(
-        F.length(F.regexp_replace(t, r"[^.,;:!?]", "")).cast("double") / safe_n, 6
-    )
-    digit_ratio = F.round(
-        F.length(F.regexp_replace(t, r"[^0-9]", "")).cast("double") / safe_n, 6
-    )
-    score = (
-        F.lit(1.0)
-        - F.least(punct_ratio * 4.0, F.lit(0.3))
-        - F.least(digit_ratio * 3.0, F.lit(0.3))
-        - F.when(token_count(t) < 10, 0.4).otherwise(0.0)
-    )
-    return F.round(F.greatest(score, F.lit(0.0)), 6)
-
-
 def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Composite 0-1 quality score from the features (documented weights)."""
     feats = quality_features(df, text_col)

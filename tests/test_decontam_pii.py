@@ -1,4 +1,4 @@
-"""Tests for decontamination, PII scrub, and vocabulary operators."""
+"""Tests for decontamination and vocabulary operators."""
 
 from pyspark.sql import functions as F
 
@@ -58,27 +58,6 @@ def test_contamination_join_is_broadcast(spark):
     # never shuffles (the only Exchange feeds the small hits aggregation)
     assert plan.count("BroadcastHashJoin") == 2
     assert "SortMergeJoin" not in plan
-
-
-def test_pii_counts_and_redaction_golden(spark):
-    from gencore_spark.operators.pii import pii_signals, redact
-
-    text = (
-        "mail a.b+c@ex-ample.org and second@ex.io, server 10.0.255.7 up, "
-        "call +1 555 0100 4242 now"
-    )
-    df = spark.createDataFrame([(1, text), (2, "no pii here")],
-                               "doc_id long, text string")
-    sig = {r["doc_id"]: r for r in pii_signals(df).collect()}
-    assert (sig[1]["n_emails"], sig[1]["n_ipv4"], sig[1]["n_phones"]) == (2, 1, 1)
-    assert (sig[2]["n_emails"], sig[2]["n_ipv4"], sig[2]["n_phones"]) == (0, 0, 0)
-
-    red = df.select("doc_id", redact(F.col("text")).alias("r")).collect()
-    red = {r["doc_id"]: r["r"] for r in red}
-    assert red[1] == (
-        "mail <EMAIL> and <EMAIL>, server <IPV4> up, call <PHONE> now"
-    )
-    assert red[2] == "no pii here"
 
 
 def test_vocab_topk_order_and_ties(spark):

@@ -35,9 +35,8 @@ from dataclasses import dataclass
 class DedupConfig:
     # --- shingling / signatures (the "shingle/signature config" pin) ---
     shingle_k: int = 5            # char k-shingles over normalized text
-    num_perms: int = 128          # MinHash permutations
     bands: int = 32               # LSH bands
-    rows_per_band: int = 4        # rows per band (bands*rows == num_perms)
+    rows_per_band: int = 4        # rows per band (bands*rows = num_perms)
     seed: int = 42                # perm seed; pins signatures bit-for-bit
 
     # --- verification gates (reference: isDupWith pair.cpp:307-326 — an AND
@@ -89,12 +88,10 @@ class DedupConfig:
     # at ~100 MB, inside executor memory on any sane cluster profile.
     attach_broadcast_max_rows: int = 100_000
 
-    def __post_init__(self) -> None:
-        if self.bands * self.rows_per_band != self.num_perms:
-            raise ValueError(
-                f"bands*rows_per_band must equal num_perms "
-                f"({self.bands}*{self.rows_per_band} != {self.num_perms})"
-            )
+    @property
+    def num_perms(self) -> int:
+        """MinHash permutations: one per row of every band (128)."""
+        return self.bands * self.rows_per_band
 
     def candidate_recall_at(self, jaccard: float) -> float:
         """P(candidate stage catches a pair with true Jaccard ``jaccard``)."""

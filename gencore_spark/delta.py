@@ -93,13 +93,13 @@ touched buckets.  One kind of join still builds on a
 corpus-sized side: the re-delivery and seen-text anti-joins (s1, s2).
 Signatures, bucketing, verify, CC and the vote are O(delta + touched); the
 delta-sized CC graph runs on the driver up to the CC cutover.  Each
-updated table is written as ``old ∪ delta``: under an Iceberg catalog that
-union is an O(delta) metadata append — the new snapshot shares the old
-data files (``writeTo(...).append()`` on a branched table).  The
-sandbox's directory-of-parquet fallback has no shared-file snapshots, so
-there the union physically rewrites the table — O(corpus) sequential I/O
-per delta, narrow (no shuffle), an artifact of the fallback, not the
-model.
+updated table is written as ``old ∪ delta``.  The snapshots are parquet
+directories (:class:`~gencore_spark.sources.TableIO`), which have no
+shared-file snapshots, so the union physically rewrites the table —
+O(corpus) sequential I/O per delta, narrow (no shuffle).  That cost is the
+storage layout's, not the model's: under an Iceberg catalog the same union
+is an O(delta) metadata append — the new snapshot shares the old data
+files (``writeTo(...).append()`` on a branched table).
 """
 
 from __future__ import annotations

@@ -18,10 +18,14 @@ ladder, ``group.cpp:394-501``):
 5. canonical row among winning-text rows: **url asc**, then **warc_ts asc**
    (earliest fetch of the lexicographically-first url form).
 
-Execution shape: a single hash aggregation with a ``min_by`` over a struct
-ordering key — NOT a ``row_number`` window.  A window over ``cluster_id``
-makes one boilerplate mega-cluster one straggler task at 100× scale; the
-aggregate gets map-side partial combine for free.
+Execution shape: two levels of hash aggregation with ``min_by`` over
+struct ordering keys — NOT a ``row_number`` window.  Level 1 groups by
+(cluster, text) and keeps each text's votes, containment and earliest row
+(rung 5); level 2 groups those by cluster and elects the text (rungs
+1-4).  A window over ``cluster_id`` makes one boilerplate mega-cluster
+one straggler task at 100× scale, and so would any whole-cluster buffer
+(a ``collect_list`` or a grouped-map pandas UDF per cluster); the
+aggregates get map-side partial combine for free.
 
 Output columns (the FR/RR aux-tag analog, ``pair.cpp:54-68``):
 
@@ -31,9 +35,10 @@ Output columns (the FR/RR aux-tag analog, ``pair.cpp:54-68``):
   the canonical itself — the duplex-strand count analog;
 * ``n_variants`` — distinct texts in the cluster (the NM-delta analog).
 
-Everything is JVM-side DataFrame ops (four hash aggregations, no window);
-no Python in this stage.  The vote keeps every cluster: the caller applies
-the ``min_cluster_size`` gate (:func:`size_gate`) to its output.
+Everything is JVM-side DataFrame ops (three hash aggregations — the two
+levels and the mirror counts — and no window); no Python in this stage.
+The vote keeps every cluster: the caller applies the ``min_cluster_size``
+gate (:func:`size_gate`) to its output.
 """
 
 from __future__ import annotations
@@ -58,75 +63,60 @@ def mirror_key(url_col="url"):
 
 
 def consensus_vote(members: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """members (doc_id, url, warc_ts, html, text, lang, text_hash,
-    cluster_id) → one canonical row per cluster with fr/rr/n_variants.
+    """members (doc_id, url, warc_ts, text, lang, text_hash, cluster_id
+    [, containment]) → one canonical row per cluster with fr/rr/n_variants.
 
     Shuffle-byte discipline: the election itself runs on metadata only —
     ``text`` (the fat payload) is stripped up front (its length, the only
     thing the vote needs, is precomputed) and re-attached to the winners
     by one ``doc_id`` join at the end.  Carrying text through the
-    vote/mirror/stats shuffles moved every member's text 2-4x; this moves
-    each text once.
+    vote/mirror shuffles moved every member's text 2-4x; this moves each
+    text once.
     """
-    has_text = "text" in members.columns
-    if has_text:
-        text_by_doc = members.select("doc_id", "text")
-        members = members.withColumn("text_len", F.length("text")).drop("text")
-    # Pin the text-stripped member metadata: it feeds FOUR
-    # aggregation branches below (votes, stats, ranked's probe side,
-    # mirror_counts), and each branch is a separate evaluation of the
-    # upstream members tree — in the pipeline that tree is two joins over
-    # the docs/cluster tables per evaluation.  Thin rows only (~100 B/doc,
-    # text already split off above), so the materialization is smaller
-    # than any of the stage snapshots the pipeline already writes.
-    # ``eager=False`` defers only the final stage: creating the pin builds
-    # its RDD, which runs the members plan's broadcasts and, under AQE,
-    # its shuffle stages here, before the caller's action (4 jobs of the
-    # batch's s5 at seed 7).
-    m = members.withColumn("mirror_key", mirror_key()).localCheckpoint(eager=False)
-
-    votes = m.groupBy("cluster_id", "text_hash").agg(
-        F.count(F.lit(1)).alias("votes")
+    text_by_doc = members.select("doc_id", "text")
+    cont = F.col("containment") if "containment" in members.columns else F.lit(0.0)
+    # Pin the text-stripped member metadata: it feeds TWO aggregation
+    # branches below (the per-text level and the mirror counts), and each
+    # branch is a separate evaluation of the upstream members tree — in
+    # the pipeline that tree is two joins over the docs/cluster tables per
+    # evaluation.  Thin rows only (~100 B/doc, text already split off), so
+    # the materialization is smaller than any of the stage snapshots the
+    # pipeline already writes.  ``eager=False`` defers only the final
+    # stage: creating the pin builds its RDD, which runs the members
+    # plan's broadcasts and, under AQE, its shuffle stages here, before
+    # the caller's action (4 jobs of the batch's s5 at seed 7).
+    m = (
+        members.withColumn("text_len", F.length("text"))
+        .withColumn("cont", F.coalesce(cont, F.lit(0.0)))
+        .withColumn("mirror_key", mirror_key())
+        .drop("text", "containment")
+        .localCheckpoint(eager=False)
     )
-    stats = m.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).alias("fr"),
-        F.countDistinct("text_hash").alias("n_variants"),
+    row = F.struct(
+        *[c for c in m.columns if c not in ("cluster_id", "text_hash", "cont")]
     )
-
-    ranked = m.join(votes, ["cluster_id", "text_hash"])
-    order_fields = [(-F.col("votes")).alias("neg_votes")]
-    if "containment" in members.columns:
-        order_fields.append(
-            (-F.coalesce(F.col("containment"), F.lit(0.0))).alias("neg_cont")
-        )
-    order_fields += [
-        (F.col("text_len") if has_text else F.length("text")).alias("o_len"),
-        F.col("text_hash").alias("o_th"),
-        F.col("url").alias("o_url"),
-        F.col("warc_ts").alias("o_ts"),
-    ]
-    # keep the winner's vote count in the payload: it feeds the A5
-    # ratio-threshold fallback below (vote_ratio / low_confidence)
-    payload_cols = [c for c in ranked.columns if c != "cluster_id"]
-    canonical = (
-        ranked.groupBy("cluster_id")
-        .agg(
-            F.min_by(
-                F.struct(*payload_cols), F.struct(*order_fields)
-            ).alias("c")
-        )
-        .select("cluster_id", "c.*")
+    # level 1, one row per (cluster, text): its votes, its containment and
+    # its earliest row (rung 5)
+    texts = m.groupBy("cluster_id", "text_hash").agg(
+        F.count(F.lit(1)).alias("votes"),
+        F.max("cont").alias("cont"),
+        F.min_by(row, F.struct("url", "warc_ts")).alias("row"),
     )
-    if "containment" in members.columns:
-        canonical = canonical.drop("containment")
+    # level 2, one row per cluster: the winning text (rungs 1-4)
+    rank = F.struct(-F.col("votes"), -F.col("cont"), F.col("row.text_len"), "text_hash")
+    canonical = texts.groupBy("cluster_id").agg(
+        F.min_by(F.struct("votes", "text_hash", "row"), rank).alias("w"),
+        F.sum("votes").alias("fr"),
+        F.count("text_hash").alias("n_variants"),
+    ).select("cluster_id", "fr", "n_variants", "w.votes", "w.text_hash", "w.row.*")
 
+    # rr counts the members of every text, so it is its own aggregation
     mirror_counts = (
         m.groupBy("cluster_id", "mirror_key")
         .agg(F.count(F.lit(1)).alias("mirror_n"))
     )
-    out = (
+    return (
         canonical.join(mirror_counts, ["cluster_id", "mirror_key"])
-        .join(stats, "cluster_id")
         .withColumn("rr", (F.col("mirror_n") - F.lit(1)).cast("int"))
         # A5 fallback (group.cpp:394-501, options.cpp:18-30): the winning
         # text's share of the cluster; a weak majority is flagged, not
@@ -136,8 +126,6 @@ def consensus_vote(members: DataFrame, cfg: DedupConfig) -> DataFrame:
             "low_confidence",
             F.col("vote_ratio") < F.lit(cfg.vote_ratio_threshold),
         )
-        .drop("mirror_n", "mirror_key", "votes")
+        .drop("mirror_n", "mirror_key", "votes", "text_len")
+        .join(text_by_doc, "doc_id")
     )
-    if has_text:
-        out = out.drop("text_len").join(text_by_doc, "doc_id")
-    return out

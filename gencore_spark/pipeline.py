@@ -38,7 +38,7 @@ Scale notes (the design is for 10^3 executors / 10^14 bytes):
   broadcast cap; explode+fold above it),
   s4 none up to 100,000 verified pairs (the CC cutover: one bounded fetch,
   union-find on the driver) and O(log n) large-star/small-star rounds
-  above it, s5 four hash aggregations (no windows) — all keyed on
+  above it, s5 three hash aggregations (no windows) — all keyed on
   ids or hashes, AQE handles skew inside the cap, the mega-bucket cap
   handles the rest;
 * ``localCheckpoint`` truncates the CC rounds' lineage; stage

@@ -168,11 +168,14 @@ def test_election_ladder_is_tie_free(con):
 
 
 def test_documents_ids_unique_and_31bit(con):
-    """Load-bearing assumptions of the curation / packing / sampling
-    oracles: (1) doc_id is UNIQUE — min(struct(doc_id, ...)) in Spark vs
-    row_number()-by-doc_id in SQL are equivalent argmins only then; (2)
-    doc_id < 2^31 so the planted +1e7 copies in corpus_curation_e2e stay
-    inside the Knuth-hash fold and never alias an original id."""
+    """Load-bearing assumptions of the pages_dedup_e2e and
+    pages_dedup_incremental_e2e rows: (1) doc_id is UNIQUE — the oracle
+    keys each text by doc_id*2 (its near-dup by doc_id*2+1) and
+    ``_e2e_pages`` names each page ``ex.org/d{doc_id}`` at a doc_id-derived
+    warc_ts, so a repeated doc_id would merge two texts under one SQL key
+    and give two pages one (url, warc_ts), hence one engine doc_id.  The
+    range check (< 1e7) is only a sanity bound on the corpus: no remaining
+    row needs more than doc_id*2+1 to fit a BIGINT."""
     n, nd, mx, mn = con.execute(
         "SELECT count(*), count(DISTINCT doc_id), max(doc_id), min(doc_id)"
         " FROM documents"

@@ -252,6 +252,49 @@ def test_vote_ratio_flags_weak_majority(spark):
     assert by[2]["text"] == "pppp"
 
 
+def test_consensus_ladder_rungs_and_mirror_support(spark):
+    """Rung 2 (containment breaks a vote tie), rung 4 (text_hash asc),
+    rung 5 (warc_ts asc under one url), a winning text whose earliest url
+    is not the cluster's earliest, and rr over the members of every text."""
+    import datetime
+
+    t0, t1 = datetime.datetime(2024, 1, 1), datetime.datetime(2024, 2, 1)
+    schema = (
+        "doc_id long, url string, warc_ts timestamp, text string, lang string,"
+        " text_hash long, cluster_id long, containment double"
+    )
+    rows = [
+        # cluster 1: one vote each; the longer, higher-hash text is the
+        # more contained one, so rung 2 decides before rungs 3 and 4
+        (1, "https://a/1", t0, "aaaaaaaa", "en", 900, 1, 0.9),
+        (2, "https://a/0", t0, "bb", "en", 800, 1, 0.5),
+        # cluster 2: votes, containment and length tie → text_hash asc
+        (3, "https://b/0", t0, "cccc", "en", 1100, 2, None),
+        (4, "https://b/1", t0, "dddd", "en", 1050, 2, None),
+        # cluster 3: one text fetched twice under one url → warc_ts asc,
+        # though the later fetch has the smaller doc_id
+        (5, "https://c/0", t1, "eeee", "en", 1200, 3, None),
+        (6, "https://c/0", t0, "eeee", "en", 1200, 3, None),
+        # cluster 4: text X (3 votes) wins; its earliest url d/5 is not the
+        # cluster's earliest (http://www.d/5/, of text Y).  rr counts that
+        # Y member (same mirror key as d/5), not d/0, d/7 or d/9
+        (7, "https://d/9", t0, "xxxx", "en", 1300, 4, None),
+        (8, "https://d/5", t0, "xxxx", "en", 1300, 4, None),
+        (9, "https://d/7", t0, "xxxx", "en", 1300, 4, None),
+        (10, "http://www.d/5/", t0, "yy", "en", 1400, 4, None),
+        (11, "https://d/0", t0, "yy", "en", 1400, 4, None),
+    ]
+    out = consensus_vote(spark.createDataFrame(rows, schema), DedupConfig())
+    by = {r["cluster_id"]: r for r in out.collect()}
+    assert by[1]["doc_id"] == 1 and by[1]["text"] == "aaaaaaaa"
+    assert by[2]["doc_id"] == 4 and by[2]["text_hash"] == 1050
+    assert by[3]["doc_id"] == 6 and by[3]["warc_ts"] == t0
+    assert by[4]["doc_id"] == 8 and by[4]["url"] == "https://d/5"
+    assert (by[4]["fr"], by[4]["n_variants"], by[4]["rr"]) == (5, 2, 1)
+    assert by[4]["vote_ratio"] == 0.6 and by[4]["low_confidence"]
+    assert [by[c]["rr"] for c in (1, 2, 3)] == [0, 0, 1]
+
+
 def test_stale_workdir_fails_fast(spark, tmp_path):
     """Resuming from a snapshot missing expected columns must raise a clear
     'stale workdir' error, not an unresolved-column AnalysisException later."""

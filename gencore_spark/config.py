@@ -74,12 +74,6 @@ class DedupConfig:
     cc_max_iterations: int = 25
 
     # --- execution ---
-    # MinHash slots used by the JVM est-Jaccard verify gate.  zip_with/
-    # aggregate HOFs are interpreted (not codegen'd), so the gate costs
-    # ~slots lambda evals per pair; a 32-slot prefix keeps the same 3σ
-    # no-false-reject guarantee (margin recomputed from the slot count)
-    # at 1/4 the CPU.  Must be a multiple of rows_per_band <= num_perms.
-    est_gate_slots: int = 32
     # Pair-payload attach strategy cutover (operators/verify.py
     # attach_pair_payload): payload sides with <= this many rows are
     # broadcast (two broadcast-hash joins, zero exchanges, no sort);

@@ -248,7 +248,7 @@ def run_stages(
         main = d["s1_docs"].filter(~F.col("bypass")).select(
             "doc_id", "text", *_TEXT_KEY
         )
-        fresh = distinct_text_reps(main, cfg).join(
+        fresh = distinct_text_reps(main).join(
             o_reps.select(*_TEXT_KEY), _TEXT_KEY, "left_anti"
         )
         # drop the RAW text before with_signatures: its repartition

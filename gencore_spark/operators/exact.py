@@ -93,7 +93,7 @@ def with_text_hash(docs: DataFrame) -> DataFrame:
     )
 
 
-def distinct_text_reps(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
+def distinct_text_reps(docs: DataFrame) -> DataFrame:
     """One representative row per distinct text: (text_hash, text_hash2,
     rep_id, text, norm_text).  rep_id = min doc_id in the exact group
     (deterministic)."""

@@ -4,12 +4,12 @@ Reference analog: the pre/post ``Stats`` objects (``stats.cpp:101-139``),
 the duplication histogram (``stats.cpp:123-133``) and the JSON report
 (``jsonreporter.cpp:11-42``).
 
-Counters are computed as one aggregation per stage DataFrame (triggered by
-the pipeline at checkpoint boundaries — no extra passes over data that is
-being materialized anyway); the per-partition row counts and the cluster
-size histogram come from one ``spark_partition_id()`` groupBy
-(:func:`partition_and_size_stats`) — the lineage trail the north_star asks
-for.
+Stage row counts are observed metrics of each stage's snapshot write (an
+``Observation`` in the pipeline's snapshot runner — no count jobs, no extra
+passes over data that is being materialized anyway); the per-partition row
+counts and the cluster size histogram come from one ``spark_partition_id()``
+groupBy (:func:`partition_and_size_stats`), one Spark job — the lineage
+trail the north_star asks for.
 """
 
 from __future__ import annotations

@@ -222,6 +222,13 @@ def attach_pair_payload(
     )
 
 
+# MinHash slots the est-Jaccard gate reads (gate 1 in verify_pairs, ~one
+# interpreted lambda eval per slot per pair): a 32-slot prefix keeps the same
+# 3σ no-false-reject guarantee (margin recomputed from the slot count) at 1/4
+# the CPU of all 128.  Must be a multiple of rows_per_band.
+_EST_GATE_SLOTS = 32
+
+
 def verify_pairs(
     edges: DataFrame,
     signed: DataFrame,
@@ -276,7 +283,7 @@ def verify_pairs(
     # lambda eval per slot per pair makes this the priciest JVM gate —
     # profiled at 405 CPU-s on 60k docs when it ran first over all 128
     # slots — so it runs only on popcount survivors AND over a
-    # cfg.est_gate_slots prefix of the signature.  The estimator's std
+    # _EST_GATE_SLOTS prefix of the signature.  The estimator's std
     # dev is sqrt(J(1-J)/slots); gating at threshold − 3σ (margin
     # recomputed from the slot count) rejects essentially no true pairs
     # while pruning the false collisions the hamming cut let through,
@@ -285,7 +292,7 @@ def verify_pairs(
     # UPWARD bias only, so it can never reject a true pair; it just
     # passes a few extra junk pairs on to the decisive exact gate.
     j = cfg.jaccard_threshold
-    slots = min(cfg.est_gate_slots, cfg.num_perms)
+    slots = min(_EST_GATE_SLOTS, cfg.num_perms)
     margin = 3.0 * (j * (1.0 - j) / slots) ** 0.5
     est = F.aggregate(
         F.zip_with(

@@ -24,8 +24,9 @@ re-run job resumes mid-pipeline without recomputation.  Stage row counts
 are observed metrics of the snapshot write, not count jobs, and every read
 declares its stage's schema, so it infers none; a stale snapshot is caught
 from one parquet footer on the driver.  Both entry points write one
-``REPORT.json`` schema: per-stage rows, ``s3_attach``, ``s3_buckets``,
-``summary`` and ``lineage``.
+``REPORT.json`` schema: per-stage rows, ``s3_attach`` (``n_reps_bound``,
+the s2 row count that bounds verify's text payload, and the attach
+``mode``), ``s3_buckets``, ``summary`` and ``lineage``.
 
 Scale notes (the design is for 10^3 executors / 10^14 bytes):
 
@@ -145,7 +146,7 @@ class DedupPipeline:
         n_reps = self._recorded_rows("s2_reps", reps)
         broadcast = n_reps <= self.cfg.attach_broadcast_max_rows
         self.report.stage(
-            "s3_attach", n_reps=n_reps, mode="broadcast" if broadcast else "fold"
+            "s3_attach", n_reps_bound=n_reps, mode="broadcast" if broadcast else "fold"
         )
         signed = reps.select("rep_id", "norm_text", "simhash", "minhash")
         return verify_pairs(edges, signed, self.cfg, n_payload_rows=n_reps)

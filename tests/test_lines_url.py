@@ -1,4 +1,5 @@
-"""Line-level dedup (CCNet-style) and URL canonicalization/refetch collapse."""
+"""Line-level dedup (CCNet-style, across and within documents) and URL
+canonicalization/refetch collapse."""
 
 from __future__ import annotations
 
@@ -6,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from gencore_spark.functions.urlnorm import canonical_url, with_canonical_url
-from gencore_spark.operators.lines import line_dedup
+from gencore_spark.operators.lines import intradoc_line_dedup, line_dedup
 from gencore_spark.operators.urldedup import url_dedup
 
 
@@ -64,6 +65,41 @@ def test_line_dedup_plan_is_jvm_only(spark):
     docs = spark.createDataFrame([(0, "a\nb")], "doc_id long, text string")
     plan = line_dedup(docs)._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEval" not in plan and "BatchEval" not in plan
+
+
+def test_intradoc_line_dedup_constructed(spark):
+    docs = spark.createDataFrame(
+        [
+            # promo brackets the body, body line doubled
+            (0, "Buy now!\nreal content A\nBuy now!\nreal content A\nend"),
+            # indented repeat folds onto the flush first occurrence (trim
+            # key), but the ORIGINAL spelling of the first survives
+            (1, "  menu  \nmenu\nbody"),
+            # no repeats -> unchanged (empty line dropped)
+            (2, "one\n\ntwo"),
+            # whitespace-only doc survives as an empty row
+            (3, " \n  "),
+        ],
+        "doc_id long, text string",
+    )
+    got = {r["doc_id"]: r for r in intradoc_line_dedup(docs).collect()}
+    assert got[0]["text_dedup"] == "Buy now!\nreal content A\nend"
+    assert (got[0]["n_lines"], got[0]["n_removed"]) == (5, 2)
+    assert got[1]["text_dedup"] == "  menu  \nbody"
+    assert (got[1]["n_lines"], got[1]["n_removed"]) == (3, 1)
+    assert got[2]["text_dedup"] == "one\ntwo"
+    assert (got[2]["n_lines"], got[2]["n_removed"]) == (2, 0)
+    assert (got[3]["text_dedup"], got[3]["n_lines"], got[3]["n_removed"]) == ("", 0, 0)
+
+
+def test_intradoc_line_dedup_is_per_document(spark):
+    """A line shared ACROSS docs is untouched — that is line_dedup's job."""
+    docs = spark.createDataFrame(
+        [(0, "shared\nmine"), (1, "shared\nyours")],
+        "doc_id long, text string",
+    )
+    got = {r["doc_id"]: r["text_dedup"] for r in intradoc_line_dedup(docs).collect()}
+    assert got == {0: "shared\nmine", 1: "shared\nyours"}
 
 
 CANON_CASES = [

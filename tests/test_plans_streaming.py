@@ -33,7 +33,7 @@ def test_html_pruned_from_signature_scan(spark, pages_parquet):
     pages = spark.read.parquet(pages_parquet)
     main, _ = route(with_doc_ids(pages), DEFAULT_CONFIG)
     docs = with_text_hash(main).select("doc_id", "text", "text_hash", "text_hash2")
-    reps = distinct_text_reps(docs, DEFAULT_CONFIG)
+    reps = distinct_text_reps(docs)
     for cols in scan_read_columns(reps):
         assert "html" not in cols, f"scan reads html: {cols}"
 
